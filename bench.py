@@ -2,7 +2,7 @@
 """Benchmark harness: headline catalog queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Prints ONE JSON line (built by ``_headline_line``):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each measurement set runs in its OWN JVM (a subprocess per set): the
@@ -801,6 +801,61 @@ def _spawn(which: str, sf_dir: str) -> dict:
     )
 
 
+def _headline_line(
+    *,
+    value: float,
+    queries: dict[str, float],
+    new_total: float,
+    r4_total: float,
+    r5_total: float,
+    r6_total: float,
+    r7_total: float,
+    sf: float | None,
+    parse_rows_per_sec: float | None,
+    parse_rows_per_sec_4m: float | None,
+    isolated_jvms: bool,
+    calib_sec: float | None,
+    calib_sec_mt: float | None,
+    min_totals: dict[str, float] | None,
+) -> str:
+    """The ONE printed JSON line. Built here so main() and the line-budget
+    test share a single key set: the line's reader keeps only the last
+    2000 chars of stdout, and a line that outgrows it records
+    parsed=null."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "value": value,
+            "unit": "sec",
+            "queries": queries,
+            # core_total is the top-level "value"; pass-2 totals and the
+            # shingle-cache build live in BENCH_DETAIL.json
+            "new_total": new_total,
+            "r4_total": r4_total,
+            "r5_total": r5_total,
+            "r6_total": r6_total,
+            "r7_total": r7_total,
+            "sf": sf,
+            "parse_rows_per_sec": parse_rows_per_sec,
+            "parse_rows_per_sec_4m": parse_rows_per_sec_4m,
+            "isolated_jvms": isolated_jvms,
+            # fixed-work box-speed probes from the CORE child's JVM
+            # (10 M-iteration pure-Python spin, 1 thread and N
+            # processes): the ratio of two runs' readings separates
+            # machine drift from plan regression arithmetically
+            "calib_sec": calib_sec,
+            "calib_sec_mt": calib_sec_mt,
+            # the per-query min-of-passes map is in BENCH_DETAIL.json
+            "qmin_sidecar": min_totals is not None,
+            # EVERY set's stable numerator: pass-1 totals swing with
+            # co-tenant load; the per-query min over both in-JVM passes
+            # does not (experiments/measure_bench_drift.py)
+            "min_totals": min_totals,
+        },
+        separators=(",", ":"),
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -1202,62 +1257,38 @@ def main() -> None:
              "parse_jvm_passes": parse_detail},
             f, indent=1,
         )
-    line = json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": total,
-            "unit": "sec",
-            "queries": {**timings, **timings_new, **timings_r4},
-            # core_total is the top-level "value"; pass-2 totals and the
-            # shingle-cache build live in BENCH_DETAIL.json — the line
-            # must fit the driver's 2000-char stdout tail and min_totals
-            # (below) displaced them as the stable signal
-            "new_total": round(sum(timings_new.values()), 4),
-            "r4_total": round(
-                sum(v for k, v in timings_r4.items() if k in set(R4)), 4
-            ),
-            "r5_total": round(
-                sum(v for k, v in timings_r4.items() if k in set(R5)), 4
-            ),
-            "r6_total": round(
-                sum(v for k, v in timings_r4.items() if k in set(R6)), 4
-            ),
-            "r7_total": round(
-                sum(v for k, v in timings_r4.items() if k in set(R7)), 4
-            ),
-            "sf": sf,
-            "parse_rows_per_sec": parse_rows,
-            "parse_rows_per_sec_4m": parse_rows_4m,
-            "isolated_jvms": isolated,
-            # fixed-work box-speed probe from the CORE child's JVM
-            # (10 M-iteration pure-Python spin, ~1 s on the r13
-            # builder box): the ratio of two rounds' calib_sec
-            # separates machine drift from plan regression
-            # arithmetically (r12 verdict item 2)
-            "calib_sec": calib_sec,
-            # the CORE child's N-process companion reading (r15 verdict
-            # item 2) — the contention the 1-thread spin cannot see
-            "calib_sec_mt": calib_mt_secs.get("core",
-                                              calib_mt_secs.get(
-                                                  "single_jvm")),
-            # per-query min-of-passes map is in BENCH_DETAIL.json
-            "qmin_sidecar": bool(pass2),
-            # EVERY set's stable numerator vs the 2x-baseline bar (the
-            # r7/r8 drift lesson: pass-1 totals swing with co-tenant
-            # load; the per-query min over both in-JVM passes does not —
-            # experiments/measure_bench_drift.py). min_totals.core is
-            # r8's core_min_total under a compact nested key so all six
-            # sets fit the driver's tail window.
-            "min_totals": {
-                "core": _min_total(CORE),
-                "new": _min_total(NEW),
-                "r4": _min_total(R4),
-                "r5": _min_total(R5),
-                "r6": _min_total(R6),
-                "r7": _min_total(R7),
-            } if pass2 else None,
-        },
-        separators=(",", ":"),
+    line = _headline_line(
+        value=total,
+        queries={**timings, **timings_new, **timings_r4},
+        new_total=round(sum(timings_new.values()), 4),
+        r4_total=round(
+            sum(v for k, v in timings_r4.items() if k in set(R4)), 4
+        ),
+        r5_total=round(
+            sum(v for k, v in timings_r4.items() if k in set(R5)), 4
+        ),
+        r6_total=round(
+            sum(v for k, v in timings_r4.items() if k in set(R6)), 4
+        ),
+        r7_total=round(
+            sum(v for k, v in timings_r4.items() if k in set(R7)), 4
+        ),
+        sf=sf,
+        parse_rows_per_sec=parse_rows,
+        parse_rows_per_sec_4m=parse_rows_4m,
+        isolated_jvms=isolated,
+        calib_sec=calib_sec,
+        # the CORE child's N-process companion reading
+        calib_sec_mt=calib_mt_secs.get("core",
+                                       calib_mt_secs.get("single_jvm")),
+        min_totals={
+            "core": _min_total(CORE),
+            "new": _min_total(NEW),
+            "r4": _min_total(R4),
+            "r5": _min_total(R5),
+            "r6": _min_total(R6),
+            "r7": _min_total(R7),
+        } if pass2 else None,
     )
     if len(line) > 1900:  # driver tail window is 2000 chars — stay inside
         print(f"bench: WARNING json line is {len(line)} chars",

@@ -3,8 +3,7 @@ label broadcast (r19). Arm A = current code (F.broadcast around the
 createDataFrame label set in connected_components' driver-finish
 branch); arm B = the r18 shape, recreated by patching F.broadcast to
 identity inside operators.dedup for the build (hint removal only — the
-join reverts to the planner's SortMergeJoin over two exchanges, the
-exact before-plan in plans/r19/dedup_clusters_before.txt).
+join reverts to the planner's SortMergeJoin over two exchanges).
 
 Arms alternate per round in ONE JVM (box drift hits both equally); the
 shared shingle cache is materialized off the clock first, exactly as

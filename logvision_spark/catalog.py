@@ -2705,9 +2705,7 @@ def _event_counter_oracle() -> str:
     """The DuckDB mirror of `_event_counter_specs` — one batch
     aggregation per counter over the WHOLE events table, shared by
     every multiplexed-KV entry so the two sides of the spec/oracle
-    contract can only drift together (a helper function, not a
-    module-level constant, so it stays inside the fingerprint
-    closure)."""
+    contract can only drift together."""
     return (
         "SELECT 'user' AS counter, CAST(user_id AS VARCHAR) AS member, "
         "CAST(count(*) AS BIGINT) AS total FROM events GROUP BY user_id "
@@ -5140,269 +5138,6 @@ def _driver_checked_names() -> frozenset[str]:
     return frozenset(_driver_history())
 
 
-# Entry → round in which its builder (or an operator on its code path)
-# was last EDITED. Maintained by hand alongside the edit itself: an
-# entry whose latest driver-green row predates this round has a green
-# checkmark for code that no longer exists, so the export order ranks
-# it ahead of merely-stale greens until the driver re-confirms it
-# (r5 verdict: eight r5-edited builders sat behind the rotation).
-# Entries fall out of the priority tier automatically once their
-# latest green row's round reaches the edited round.
-_EDITED_ROUND: dict[str, int] = {
-    # round-5 edits (rewrites/fixes behind their last driver check)
-    "q18_large_orders": 5,       # aggregate-then-join rewrite
-    "a_user_trend_slope": 5,     # grouped-map schema/key generalization
-    "dedup_minhash_fast": 5,     # NULL-sig exclusion from banding
-    "q7_nation_volume": 5,       # vacuous-gate fix (NATION_1/NATION_2)
-    # round-6 edits (ADVICE fixes; same results on fixtures, but the
-    # code path changed behind the green row)
-    "a3_count_by_user_salted": 6,   # _salt_expr refactor (MapType skip)
-    "j_salted_skew_join": 6,        # same
-    "ivf_topk_vec0": 6,             # memo eviction rewrite
-    "ivf_topk_batch": 6,            # memo eviction + r5 normalize-fit
-    "sim_top10_vec0": 6,            # cosine NULL-propagation guard
-    "sim_topk_batch": 6,
-    "sim_near_pairs": 6,
-    "sim_near_pairs_lsh": 6,
-    "sim_srp_topk_vec0": 6,
-    # round-7 edits: asof.py grew direction support in
-    # asof_join_bucketed (shared carry aggregate; forward/nearest
-    # carries). asof_join itself is byte-identical, but the fingerprint
-    # hashes the whole module, so every asof entry re-greens.
-    "j6_asof_join": 7,
-    "j6_asof_forward": 7,
-    # r6 bump was the struct-payload doc/plan-pin rework (the
-    # single-sort nearest attempt was measured O(m²) and REVERTED —
-    # the shipped code keeps the two-sort formulation)
-    "j6_asof_nearest": 7,
-    # carry-stage plan rework: full-outer bucket spine (right side
-    # aggregated once) + nearest's two carries from ONE pass over the
-    # spine (explode) — executed-plan scans 8→4, hot-key 3.1×/2.9×
-    "j6_asof_bucketed": 7,
-    # round-7 funnel rework: per-step counting recomputed predecessor
-    # stages (6 scans of events in the executed plan) → LEFT-join
-    # chain counted once from the final frame (3 scans, each stage
-    # computed once; a 1-scan window form measured slower — see doc)
-    "a_conversion_funnel": 7,
-    # round-8: rocksdb_state_store docstring-only edit (the changelog
-    # BOTH-WAYS pinning is now documented as deliberate, r7 ADVICE).
-    # Behavior is byte-identical, but pipeline.py's file content is
-    # hashed into every stream entry's fingerprint, so they re-green
-    # conservatively — same precedent as the r7 bump below.
-    "stream_recovery_counts": 8,
-    "stream_a7_count_by_type": 8,
-    "stream_custom_state_totals": 8,
-    "stream_dedup_distinct_props": 8,
-    "stream_j_interval_join": 8,
-    "stream_j_left_outer": 8,
-    "stream_j_static_enrich": 8,
-    "stream_sketch_daily_users": 8,
-    "stream_w_append_finalized": 8,
-    "stream_w_tumbling_counts": 8,
-    "stream_w_session": 8,
-    # round-12: zrevrange's within-counter full sort became a
-    # threshold heap-select (value-only k-th pass + candidate filter
-    # under the lock, tie-break sort of candidates outside) — 1 M-
-    # member top-10 read 791 ms (r11 full sort) → 58 ms (r11 verdict
-    # item 2; experiments/measure_board_read_scale.py) — and the store
-    # gained the restore()/persist_state() restart pair. Public contract
-    # (snapshot/zscore/zrevrange/to_df, merge/backfill fencing) is
-    # unchanged — the Hypothesis property tests run unmodified — but
-    # multiplex.py is hashed into all three KV entries' fingerprints,
-    # so all three re-green together (coupling pinned mechanically by
-    # tests/test_export_order.py::test_multiplex_edit_trips_all_kv_entries).
-    # (Previous bump: r11 per-counter store layout.)
-    # round-14: the store gained the persist_state_to/restore_from
-    # FILE pair (the property-pinned byte codec, previously test-only,
-    # now ships; r13 verdict optional 5). The live merge/fence/read
-    # contract is untouched — every pre-existing property test runs
-    # unmodified — but multiplex.py is hashed into all three KV
-    # entries' fingerprints, so they re-green together as usual
-    # (coupling pinned by test_export_order::
-    # test_multiplex_edit_trips_all_kv_entries).
-    # round-15: persist_state_to's tmp file became a unique mkstemp
-    # sibling (two concurrent persists can no longer interleave a
-    # half-written publish; a failed persist unlinks its tmp instead
-    # of leaving residue) and the publish now fsyncs the PARENT
-    # DIRECTORY after os.replace so the rename itself is durable
-    # across power loss (both r14 ADVICE lows). The live
-    # merge/fence/read contract is byte-identical — every pre-existing
-    # property test runs unmodified — but multiplex.py is hashed into
-    # all three KV entries' fingerprints, so they re-green together
-    # as usual.
-    # round-16: the r15 ADVICE trio landed in persist_state_to by
-    # removing the umask probe entirely — the tmp sibling is now
-    # created by the store itself (O_CREAT|O_EXCL, mode 0o666,
-    # pid+counter name) so the KERNEL applies the current umask at
-    # create time: no os.umask(0)/restore dance to race concurrent
-    # persists (the ADVICE medium), no fchmod to leak the fd or to
-    # guard on Windows (the two lows), and fdopen takes fd ownership
-    # immediately after create. The live merge/fence/read contract is
-    # byte-identical — every pre-existing property test runs
-    # unmodified — but multiplex.py is hashed into all three KV
-    # entries' fingerprints, so they re-green together as usual.
-    # (Previous bumps: r15 mkstemp+dir-fsync, r14 file pair shipped,
-    # r12 zrevrange heap-select, r11 store layout.)
-    "stream_counter_multiplex": 16,
-    "stream_board_top_users": 16,
-    "stream_backfill_cutover": 16,
-    # round-16: operators/text.py's `tokens` docstring became a raw
-    # string (the repo's one SyntaxWarning — invalid escape '\s' in the
-    # normalization example; r15 verdict item 5). Behavior is
-    # byte-identical (docstring only), but the file content is hashed
-    # into every text-importing entry's fingerprint, so all eight
-    # re-green conservatively — same precedent as the r8 docstring-only
-    # pipeline.py bump. ROTATION ARITHMETIC, on the record: these 8 +
-    # the 3 KV entries = 11 re-edit slots, of which 3 (text_lang_id,
-    # text_bpe_token_count, corpus_split_counts) are r13-stale and
-    # sampled this round anyway, so the 50-slot sample covers 11 + 39
-    # of the 40 remaining r13-stale entries. Exactly ONE r13 green
-    # (mm_partition_packing, registration-last among r13s) waits one
-    # more round; it leads r17's rotation, where the floor then jumps
-    # r13 → r15 in one step.
-    # round-17: the real codec gained binary netpbm (P5 PGM / P6 PPM)
-    # beside BMP + farbfeld — _parse_netpbm + the magic-gated per-row
-    # scan in decode_images, the pnm_payload JVM composer, and
-    # mm_decode_real now mixes all three formats in one fixture corpus
-    # (r16 verdict optional item 6: close the mm codec gap honestly; no
-    # new catalog surface). multimodal.py is hashed into every mm
-    # entry's fingerprint, so all seven re-green together. ROTATION
-    # ARITHMETIC, on the record: the seven mm entries are r13×1 + r14×4
-    # + r15×2 stale, so the changed tier reorders WITHIN the 50-slot
-    # sample rather than displacing it — the prefix still takes
-    # mm_partition_packing, all 45 r14s, and 2 r15 spares, and the
-    # union floor jumps r13 → r15 exactly as the r16 verdict planned.
-    "mm_partition_packing": 17,
-    "mm_decode_real": 17,
-    "mm_decode_meta": 17,
-    "mm_resize_real": 17,
-    "mm_features_real": 17,
-    "mm_frame_sample": 17,
-    "mm_feature_stats": 17,
-    "fp_rolling_hash": 16,
-    "text_lang_id": 16,
-    "text_redact_pii": 16,
-    "corpus_split_counts": 16,
-    "text_bpe_token_count": 16,
-    "pack_token_bins": 16,
-    "text_chunk_windows": 16,
-    # round-18 (optimization round 1): performance-only edits, results
-    # pinned identical vs the DuckDB oracle before commit.
-    # - dedup.py: LSH candidate emit-once (merge-hinted self-join, no
-    #   pair distinct), array-based Jaccard verify in near_dup_drop_list,
-    #   hashed shingle keys in cross_corpus_overlap. dedup.py is hashed
-    #   into every dedup/decontam entry's fingerprint, so they re-green
-    #   together.
-    # - serving/views.py: class_timeline(ordered=False) for the catalog
-    #   entry (display sort dropped from the hashed compare path) —
-    #   views.py is hashed into a11/a12/a13's fingerprints.
-    # - aggregations.py: grouped trend slope vectorized (one Arrow map
-    #   per partition via mapInPandas + numpy segment reductions).
-    # - catalog.py builders: corpus_quality_funnel distinct over
-    #   xxhash64(text).
-    "a11_value_sum_faithful": 18,
-    "a12_class_counts": 18,
-    "a13_class_timeline": 18,
-    "a_user_trend_slope": 18,
-    "corpus_quality_funnel": 18,
-    # round-19 (optimization round 2): dedup.py gained
-    # _spread_small_input — a data-adaptive round-robin spread applied
-    # ONLY to minhash_signatures_rows (dedup_minhash_sig min 0.51→0.38,
-    # p50 0.69→0.43; the only behavioral plan change). The other eight
-    # bumps are module-hash collateral: the rejected Arrow shingle+hash
-    # prototype was removed post-measurement (it lives in
-    # experiments/rejected_arrow_shingles_r19.py) and dedup.py is
-    # hashed into every dedup/decontam entry's fingerprint, so they
-    # re-green together as usual.
-    "dedup_minhash_sig": 19,
-    "dedup_minhash_fast": 19,
-    "dedup_ngram_jaccard": 19,
-    "stream_dedup_distinct_props": 19,
-    "dedup_simhash": 19,
-    "dedup_drop_list": 19,
-    "dedup_drop_list_16band": 19,
-    "dedup_clusters": 19,
-    "decontam_ngram_overlap": 19,
-    # - asof.py: value_cols=() special case in asof_join_bucketed — the
-    #   empty pack's max_by/min_by (struct aggregation buffer forces
-    #   SortAggregate) became struct(max/min(_rts)) (HashAggregate; 3
-    #   sorts dropped per bucketed plan). asof_join itself is untouched,
-    #   but the fingerprint hashes the whole module, so every asof
-    #   entry re-greens (same precedent as the r7 bump).
-    # round-19 (optimization round 2): asof.py's value_cols≠() carry
-    # became hash-aggregable (max/min(_rts) HashAggregate + one
-    # SHUFFLE_HASH winners re-join + row_number picks — SortAggregate
-    # 4 → 0 in the value-carrying plans; differential-identical to the
-    # max_by form on 24 adversarial configs). No catalog entry passes
-    # value_cols, but the fingerprint hashes the whole module, so every
-    # asof entry re-greens (same precedent as the r7/r18 bumps).
-    "j6_asof_join": 19,
-    "j6_asof_forward": 19,
-    "j6_asof_nearest": 19,
-    "j6_asof_bucketed": 19,
-    "j6_asof_bucketed_nearest": 19,
-    # - similarity.py: ivf_topk_batch probe selection folded into a
-    #   per-query array expression (array_sort over (distance, cell)
-    #   structs — bit-identical cell choice; the centroid broadcast
-    #   table, its crossJoin and the probe window's Exchange+Sort are
-    #   gone). similarity.py is hashed into every sim/ivf/emb entry's
-    #   fingerprint, so they re-green together.
-    # - catalog.py builders: a6_count_by_second groups on the truncated
-    #   timestamp and formats after the aggregate (narrow group key).
-    "a6_count_by_second": 18,
-    #   q1/decile: measure aggregates and the bucket CASE as single
-    #   F.expr parses (value-identical; ~300/~585 round trips per build)
-    "q1_pricing_summary": 18,
-    "a_value_decile_histogram_approx": 18,
-    "ivf_topk_batch": 18,
-    "ivf_topk_vec0": 18,
-    "sim_topk_batch": 18,
-    "sim_near_pairs": 18,
-    "sim_near_pairs_lsh": 18,
-    "sim_srp_topk_vec0": 18,
-    "emb_int8_quantize": 18,
-    # - text.py: quality_features / lang_id expression trees built as
-    #   F.expr strings (one JVM parse each; value- and schema-identical,
-    #   differential-tested) — text.py is hashed into every
-    #   text-importing entry's fingerprint, so the family re-greens
-    #   together (same precedent as the r16 docstring bump).
-    "text_lang_id": 18,
-    "text_redact_pii": 18,
-    "text_bpe_token_count": 18,
-    "text_chunk_windows": 18,
-    "corpus_split_counts": 18,
-    "pack_token_bins": 18,
-    "fp_rolling_hash": 18,
-    # round-19 (optimization round 2): the ivf_topk_batch recall
-    # harness moved to similarity.ivf_recall_table — ONE shared corpus
-    # scan scores every (query, vector) pair once and both ranks
-    # (probed-only and full-base) read that table; the probe-cell
-    # array expression is shared via _probe_cells_sql (r18 verdict
-    # item 5; row-identity with the two-branch operator⋈brute-force
-    # form pinned by test_ivf_recall_table_equals_operator_join).
-    # ivf_topk_batch is the behavior-changed entry; the other sim/emb
-    # entries re-green because similarity.py is hashed into their
-    # fingerprints (same precedent as the module-wide bumps above;
-    # the module also grew quote_ident identifier escaping — r18
-    # ADVICE — shared with asof.py/dedup.py via operators/util.py).
-    "ivf_topk_batch": 19,
-    "ivf_topk_vec0": 19,
-    "sim_topk_batch": 19,
-    "sim_near_pairs": 19,
-    "sim_near_pairs_lsh": 19,
-    "sim_srp_topk_vec0": 19,
-    "emb_int8_quantize": 19,
-    # round-19: q21's semi/anti build sides gained SHUFFLE_HASH hints
-    # (sorts 3 → 0, declared shape kept — see the builder comment).
-    "q21_waiting_suppliers": 19,
-    # round-19: j2 groups/joins on the truncated TIMESTAMP (8-byte key,
-    # the a6 precedent) with the display format applied once after the
-    # join, and the error side hints SHUFFLE_HASH (full-outer SMJ's two
-    # sorts dropped; inputs stay pre-aggregated).
-    "j2_timeline_full_outer": 19,
-}
-
-
 def _export_order() -> list[str]:
     """The driver samples ~50 queries per round; this ordering maximizes
     accumulated driver-green coverage AND keeps re-verifying old rows:
@@ -5411,13 +5146,10 @@ def _export_order() -> list[str]:
        new data point;
     2. entries whose LATEST driver row was not green (stalest first) —
        fixes land in front so the driver can confirm them;
-    3. green entries whose code CHANGED after their latest green row
-       (_EDITED_ROUND) — the green is for code that no longer exists,
-       so re-confirmation outranks routine rotation (stalest first);
-    4. remaining green entries rotated by staleness: ascending
-       last-sampled round, registration order within a round — so every
-       entry keeps cycling back through the sampled prefix across
-       rounds instead of specific ones being pinned out indefinitely.
+    3. green entries rotated by staleness: ascending last-sampled
+       round, registration order within a round — so every entry keeps
+       cycling back through the sampled prefix across rounds instead of
+       specific ones being pinned out indefinitely.
 
     All entries stay in the export — nothing is hidden — and the in-repo
     mirror (tests/test_catalog_vs_duckdb) always runs every entry
@@ -5428,11 +5160,8 @@ def _export_order() -> list[str]:
     not_green = [n for n in names if n in hist and not hist[n][1]]
     not_green.sort(key=lambda n: hist[n][0])  # stable: registration order
     green = [n for n in names if n in hist and hist[n][1]]
-    changed = [n for n in green if hist[n][0] < _EDITED_ROUND.get(n, 0)]
-    changed.sort(key=lambda n: hist[n][0])
-    rest = [n for n in green if n not in set(changed)]
-    rest.sort(key=lambda n: hist[n][0])
-    return fresh + not_green + changed + rest
+    green.sort(key=lambda n: hist[n][0])
+    return fresh + not_green + green
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -74,142 +74,13 @@ def test_not_green_precede_green_and_green_rotate_stalest_first():
     # all not-green entries sit before the first green entry
     first_green = greens.index(True) if True in greens else len(tail)
     assert all(g for g in greens[first_green:])
-    green_tail = tail[first_green:]
-    # green entries edited AFTER their latest green row outrank routine
-    # rotation: they form a contiguous prefix of the green segment
-    changed = [
-        n for n in green_tail if hist[n][0] < catalog._EDITED_ROUND.get(n, 0)
-    ]
-    assert green_tail[: len(changed)] == sorted(
-        changed, key=lambda n: (hist[n][0], green_tail.index(n))
-    ) or set(green_tail[: len(changed)]) == set(changed)
-    # within each green sub-segment, last-sampled rounds are non-decreasing
-    for seg in (green_tail[: len(changed)], green_tail[len(changed):]):
-        rounds = [hist[n][0] for n in seg]
-        assert rounds == sorted(rounds)
-
-
-def test_changed_since_green_entries_lead_the_green_segment():
-    """The eight r5-edited builders (q18, salted agg/join, ivf_topk_batch,
-    asof forward/nearest, trend slope, minhash_fast — r5 verdict item 2)
-    plus the r6-touched sim/ivf family must sit inside the driver's ~50
-    sampled prefix so their post-edit code gets re-greened."""
-    exported = list(catalog.queries())
-    hist = _history()
-    for name, edited in catalog._EDITED_ROUND.items():
-        if name not in hist or not hist[name][1] or hist[name][0] >= edited:
-            continue  # re-greened (or pending non-green handling)
-        assert exported.index(name) < 50, (name, exported.index(name))
+    # green entries rotate stalest-first: last-sampled rounds are
+    # non-decreasing across the whole green segment
+    rounds = [hist[n][0] for n in tail[first_green:]]
+    assert rounds == sorted(rounds)
 
 
 def test_checked_names_come_from_reports_on_disk():
     assert catalog._driver_checked_names() == frozenset(_history())
     # and the module's history agrees with an independent parse
     assert catalog._driver_history() == _history()
-
-
-def test_edited_round_registry_tracks_builder_edits():
-    """_EDITED_ROUND is hand-maintained; this tripwire detects the
-    forgotten-bump failure mode (r6 review finding). A builder whose
-    fingerprint (own source + directly-imported logvision_spark module
-    sources) differs from the committed snapshot must carry an
-    _EDITED_ROUND entry at the CURRENT round (max driver round + 1), or
-    be fresh/not-green (those tiers already outrank rotation). Fix by
-    bumping _EDITED_ROUND then running
-    `python tests/update_builder_fingerprints.py`."""
-    import json as _json
-
-    from tests.update_builder_fingerprints import SNAPSHOT, builder_fingerprint
-
-    hist = _history()
-    current_round = max((r for r, _ in hist.values()), default=0) + 1
-    with open(SNAPSHOT) as f:
-        snap = _json.load(f)
-    stale = []
-    for name in catalog.CATALOG:
-        if name not in snap:
-            continue  # new entry: never-sampled tier covers it
-        if name not in hist or not hist[name][1]:
-            continue  # fresh or not-green tier already leads the export
-        if builder_fingerprint(name) != snap[name]:
-            if catalog._EDITED_ROUND.get(name, 0) < current_round:
-                stale.append(name)
-    assert not stale, (
-        f"builders edited without an _EDITED_ROUND bump to round "
-        f"{current_round}: {stale} — bump catalog._EDITED_ROUND and rerun "
-        "tests/update_builder_fingerprints.py"
-    )
-    # and the snapshot itself must not reference deleted entries
-    assert not (set(snap) - set(catalog.CATALOG)), "snapshot has dead entries"
-
-
-def test_fingerprint_covers_catalog_helpers_transitively():
-    """r6 ADVICE: the _run_stream_to_memory refactor removed direct
-    pipeline imports from the stream builders, so an edit to the shared
-    lifecycle helper (exactly the provider-migration class of change it
-    centralizes) no longer changed any fingerprint. The r7 fingerprint
-    hashes catalog-module helpers reachable by name from the builder —
-    transitively — plus THEIR logvision_spark imports. Pin that a
-    stream entry's material includes the helper's source AND
-    streaming/pipeline.py (reached only through the helper's own
-    import), so editing either without an _EDITED_ROUND bump fails the
-    registry test above."""
-    from tests.update_builder_fingerprints import fingerprint_material
-
-    labels = {label for label, _ in fingerprint_material("stream_a7_count_by_type")}
-    assert "helper:_run_stream_to_memory" in labels, labels
-    assert "helper:_events_stream" in labels, labels
-    assert "module:logvision_spark.streaming.pipeline" in labels, labels
-
-
-def test_fingerprint_scan_skips_register_kwarg_strings():
-    """r9 ADVICE: inspect.getsource(builder) includes the @register
-    decorator, so its oracle= SQL and doc= prose were word-scanned —
-    a helper merely MENTIONED in doc prose pulled its full source into
-    the closure, reintroducing the doc-edit churn class the r7 docstring
-    fix removed via a different path. Pin the boundary: register-kwarg
-    strings are excluded, builder-BODY strings (the r8 F.expr/spark.sql
-    case the scan exists for) still count."""
-    from tests.update_builder_fingerprints import _referenced_names
-
-    src = (
-        '@register(\n'
-        '    "entry_name",\n'
-        '    oracle="SELECT oracle_only_name FROM events",\n'
-        '    doc="prose mentioning doc_only_helper by name",\n'
-        ')\n'
-        "def entry_name(spark, sf_dir):\n"
-        '    """Docstring mentioning docstring_only_helper."""\n'
-        '    return spark.sql("SELECT lv_body_udf(x) FROM t")\n'
-    )
-    names = _referenced_names(src)
-    assert "lv_body_udf" in names  # body strings still reach the closure
-    assert "oracle_only_name" not in names
-    assert "doc_only_helper" not in names
-    assert "docstring_only_helper" not in names
-
-
-def test_multiplex_edit_trips_all_kv_entries():
-    """All three multiplexed-KV entries depend on streaming/multiplex.py
-    (the state-dump and board-read entries through _merged_event_counters,
-    the cutover entry through its own import) — so a multiplex.py edit
-    MUST change ALL THREE fingerprints (and hence trip the registry test
-    for each whose bump is forgotten). This pin makes the coupling
-    mechanical; it used to live in a hand-maintained NOTE beside
-    _EDITED_ROUND (r9 verdict item 4)."""
-    from tests.update_builder_fingerprints import fingerprint_material
-
-    for entry in (
-        "stream_counter_multiplex",
-        "stream_board_top_users",
-        "stream_backfill_cutover",
-    ):
-        labels = {label for label, _ in fingerprint_material(entry)}
-        assert "module:logvision_spark.streaming.multiplex" in labels, (
-            entry,
-            labels,
-        )
-        assert "helper:_event_counter_specs" in labels, (entry, labels)
-    for entry in ("stream_counter_multiplex", "stream_board_top_users"):
-        labels = {label for label, _ in fingerprint_material(entry)}
-        assert "helper:_merged_event_counters" in labels, (entry, labels)

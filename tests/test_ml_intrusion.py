@@ -86,16 +86,41 @@ def test_score_stream_schema(spark, model):
     assert all(r["prediction"] in (0.0, 1.0) for r in rows)
 
 
-def test_evaluate_single_class_holdout_returns_both_keys(spark, model):
+@pytest.fixture(scope="module")
+def small_model(spark):
+    """A tiny fit that needs no reference corpora: synthesized benign
+    paths against a handful of literal attack URLs."""
+    schema = "url string, label int"
+    good = spark.createDataFrame(
+        [(u, GOOD) for u in synth_good_urls(40)], schema
+    )
+    bad = spark.createDataFrame(
+        [
+            (u, BAD)
+            for u in (
+                "/index.php?id=1' or '1'='1",
+                "/search?q=<script>alert(document.cookie)</script>",
+                "/../../../../etc/passwd",
+                "/cgi-bin/test.cgi?cmd=;cat%20/etc/shadow",
+                "/login.php?user=admin'--",
+                "/q?x=1 union select password from users",
+                "/page?f=..%2f..%2f..%2fwindows/win.ini",
+                "/a?b=<img src=x onerror=alert(1)>",
+            )
+        ],
+        schema,
+    )
+    return train(good, bad)
+
+
+def test_evaluate_single_class_holdout_returns_both_keys(spark, small_model):
     """A one-class holdout used to return a partial dict (KeyError on
     the published good_acc check — review finding); both keys must
     always be present."""
-    from logvision_spark.ml.intrusion import GOOD, evaluate
-
     bad_only = spark.createDataFrame(
         [("/x?q=<script>alert(1)</script>", 1.0)], "url string, label double"
     )
-    res = evaluate(model, bad_only)
+    res = evaluate(small_model, bad_only)
     assert set(res) >= {"good_acc", "bad_acc"}
     assert res["good_acc"] is None
     assert res["bad_acc"] is not None
