@@ -31,20 +31,26 @@ honest scale signal: it is what a BUSY 1000-executor cluster pays, where
 every core-second one topology burns is a core-second another tenant
 (or trigger) doesn't get.
 
-Run: PYTHONPATH=/root/repo python experiments/measure_counter_multiplex.py
+The multiplex arm also prints the p50 of its triggers'
+`durationMs.addBatch` (from `q.recentProgress`): the per-trigger
+foreachBatch time, i.e. the delta aggregation plus the KV merge.
+
+The session comes from `logvision_spark.session.get_spark`, so it runs
+at `local[$SPARK_GRAFT_CPUS]` (default `local[*]`).
+
+Run: python experiments/measure_counter_multiplex.py
 """
 
 import os
+import statistics
 import sys
 import tempfile
 import time
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 from logvision_spark.parser import parse_access_log  # noqa: E402
+from logvision_spark.session import get_spark  # noqa: E402
 from logvision_spark.streaming.multiplex import (  # noqa: E402
     KVCounterStore,
     log_counter_specs,
@@ -52,12 +58,7 @@ from logvision_spark.streaming.multiplex import (  # noqa: E402
 )
 from logvision_spark.streaming.pipeline import counter_views  # noqa: E402
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "16g")
-    .getOrCreate()
-)
+spark = get_spark("measure-counter-multiplex")
 spark.sparkContext.setLogLevel("ERROR")
 
 # Defaults reproduce the r8 A/B (4 M rows, 4 triggers); the r9 scale
@@ -194,7 +195,15 @@ def run_multiplex() -> tuple[float, KVCounterStore]:
     if not q.awaitTermination(1800):
         raise TimeoutError("multiplex query did not drain")
     sec = time.perf_counter() - t0
-    print(f"multiplex: {store.high_water_batch_id + 1} triggers")
+    add_batch = [
+        p.durationMs["addBatch"]
+        for p in q.recentProgress
+        if "addBatch" in p.durationMs
+    ]
+    print(
+        f"multiplex: {store.high_water_batch_id + 1} triggers, "
+        f"addBatch p50 {statistics.median(add_batch):.0f} ms"
+    )
     return sec, store
 
 

@@ -13,10 +13,12 @@ remaining scale gap.
 This module is the production counter topology:
 
     ONE append-mode foreachBatch over ONE parsed stream.
-    Per micro-batch, the ENTIRE counter catalog is computed as
-    (counter, member, delta) rows by a single melt + ONE hash
-    aggregation, then merged into the KV store (the zincrby
-    equivalent), replay-fenced by batch_id.
+    The melt (array-of-structs → explode → valid/weight filter) is
+    built ONCE per query, into the streaming plan, so each micro-batch
+    scans, parses and melts in one pass. The foreachBatch callback only
+    runs ONE hash aggregation to (counter, member, delta) rows for the
+    ENTIRE counter catalog and merges them into the KV store (the
+    zincrby equivalent), replay-fenced by batch_id.
 
 Why this is the 100 TB shape:
 - **One source scan + one parse per trigger**, independent of how many
@@ -35,10 +37,11 @@ Why this is the 100 TB shape:
   cross-batch merge order can never drift a float; unit division
   (KB/MB/currency) happens once at read, in the serving layer.
 
-`melted_counter_deltas` works identically on a batch DataFrame — the
-same specs drive backfill (one batch pass over the archive) and the
-live stream, which is the equivalence property the tests pin:
-merged KV state ≡ one batch aggregation over the concatenated input.
+`melted_counter_deltas` is the same two steps (`_melt` then
+`_sum_deltas`) on a batch DataFrame — the same specs and the same code
+drive backfill (one batch pass over the archive) and the live stream,
+which is the equivalence property the tests pin: merged KV state ≡ one
+batch aggregation over the concatenated input.
 """
 
 from __future__ import annotations
@@ -87,19 +90,14 @@ class CounterSpec:
     when: Column | None = None
 
 
-def melted_counter_deltas(
-    df: DataFrame, specs: Sequence[CounterSpec]
-) -> DataFrame:
-    """ALL counters' deltas from one pass over ``df``: one projection
-    (array-of-structs melt), one explode, ONE hash aggregation →
-    (counter, member, delta) rows.
+def _melt(df: DataFrame, specs: Sequence[CounterSpec]) -> DataFrame:
+    """The melt projection: one array-of-structs per row, exploded, with
+    inapplicable (``valid`` false) and NULL-weight entries filtered out
+    → one ``e`` struct column of (counter, member, weight, valid).
 
-    Pure built-ins (array/explode/filter/sum) — whole-stage codegen,
-    no Python in the row path. The explode multiplies rows by
-    ~len(specs), but they are 3-field structs and partial aggregation
-    collapses them map-side before the single exchange; what shuffles
-    is bounded by (distinct members × partitions), not input rows.
-    """
+    Row-local (no aggregation), so it is legal on a streaming DataFrame:
+    the streaming sink applies it once, to the parsed stream, and every
+    micro-batch runs it inside the plan that already scans and parses."""
     if not specs:
         # F.array() with zero columns fails at ANALYSIS with an opaque
         # error; an empty catalog is a caller bug — say so directly.
@@ -117,15 +115,34 @@ def melted_counter_deltas(
             )
         )
     e = F.explode(F.array(*entries)).alias("e")
-    return (
-        df.select(e)
-        .where(F.col("e.valid") & F.col("e.weight").isNotNull())
-        .groupBy(
-            F.col("e.counter").alias("counter"),
-            F.col("e.member").alias("member"),
-        )
-        .agg(F.sum("e.weight").alias("delta"))
+    return df.select(e).where(
+        F.col("e.valid") & F.col("e.weight").isNotNull()
     )
+
+
+def _sum_deltas(melted: DataFrame) -> DataFrame:
+    """ONE hash aggregation of ``_melt``'s rows → (counter, member,
+    delta)."""
+    return melted.groupBy(
+        F.col("e.counter").alias("counter"),
+        F.col("e.member").alias("member"),
+    ).agg(F.sum("e.weight").alias("delta"))
+
+
+def melted_counter_deltas(
+    df: DataFrame, specs: Sequence[CounterSpec]
+) -> DataFrame:
+    """ALL counters' deltas from one pass over ``df``: one projection
+    (array-of-structs melt), one explode, ONE hash aggregation →
+    (counter, member, delta) rows.
+
+    Pure built-ins (array/explode/filter/sum) — whole-stage codegen,
+    no Python in the row path. The explode multiplies rows by
+    ~len(specs), but they are 3-field structs and partial aggregation
+    collapses them map-side before the single exchange; what shuffles
+    is bounded by (distinct members × partitions), not input rows.
+    """
+    return _sum_deltas(_melt(df, specs))
 
 
 def log_counter_specs() -> list[CounterSpec]:
@@ -206,6 +223,11 @@ class KVCounterStore:
         self._counters: dict[str, dict[str | None, int]] = {}
         self._high_water: int = -1  # last applied batch_id
         self._live_begun: bool = False  # any merge() call, even fenced
+        # stats() counters, bumped under the lock on the paths they name
+        self._merges_applied = 0
+        self._replays_fenced = 0
+        self._rows_merged = 0
+        self._backfills = 0
         self._lock = threading.Lock()
 
     def merge(self, deltas: DataFrame, batch_id: int) -> None:
@@ -227,10 +249,12 @@ class KVCounterStore:
         with self._lock:
             self._live_begun = True
             if batch_id <= self._high_water:
+                self._replays_fenced += 1
                 return
         rows = deltas.collect()
         with self._lock:
             if batch_id <= self._high_water:
+                self._replays_fenced += 1
                 return
             for r in rows:
                 members = self._counters.setdefault(r["counter"], {})
@@ -238,6 +262,8 @@ class KVCounterStore:
                     members.get(r["member"], 0) + r["delta"]
                 )
             self._high_water = batch_id
+            self._merges_applied += 1
+            self._rows_merged += len(rows)
 
     def backfill(self, deltas: DataFrame, force: bool = False) -> None:
         """One-time batch backfill — the archive pass the module
@@ -292,6 +318,22 @@ class KVCounterStore:
                 members[r["member"]] = (
                     members.get(r["member"], 0) + r["delta"]
                 )
+            self._backfills += 1
+
+    def stats(self) -> dict[str, int]:
+        """Write-path counters since this store object was built (a
+        ``restore`` starts them at zero): ``merges_applied`` (merge
+        calls that advanced the fence), ``replays_fenced`` (merge calls
+        dropped as a redelivered batch_id), ``rows_merged`` (delta rows
+        applied by those merges; backfill rows are not counted) and
+        ``backfills`` (completed backfill calls)."""
+        with self._lock:
+            return {
+                "merges_applied": self._merges_applied,
+                "replays_fenced": self._replays_fenced,
+                "rows_merged": self._rows_merged,
+                "backfills": self._backfills,
+            }
 
     @classmethod
     def restore(
@@ -680,10 +722,15 @@ def start_multiplexed_counter_sink(
     available_now: bool = False,
 ) -> StreamingQuery:
     """THE production counter topology: one stateless append-mode
-    foreachBatch over one parsed stream; each trigger computes the full
-    catalog's deltas via `melted_counter_deltas` (one scan of the
-    micro-batch, one shuffle) and hands them to ``write_batch`` — e.g.
-    ``KVCounterStore.merge`` or any zincrby-equivalent.
+    foreachBatch over one parsed stream. The melt (`_melt`) is applied
+    to ``parsed_stream`` once, when the query starts, so each trigger's
+    plan scans, parses and melts the micro-batch in one pass; the
+    callback only runs the delta aggregation (`_sum_deltas`, one
+    shuffle) and hands the (counter, member, delta) rows to
+    ``write_batch`` — e.g. ``KVCounterStore.merge`` or any
+    zincrby-equivalent. The rows are those `melted_counter_deltas`
+    gives for the same batch. An empty ``specs`` raises ValueError here
+    and starts no query.
 
     Replaces N × `start_counter_query` for counter materialization: the
     per-trigger source cost is ONE scan + ONE parse regardless of
@@ -693,11 +740,12 @@ def start_multiplexed_counter_sink(
     (ad-hoc dashboards, memory-sink tests).
     """
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch(melted_counter_deltas(batch_df, specs), batch_id)
+    def _sink(melted_batch: DataFrame, batch_id: int) -> None:
+        write_batch(_sum_deltas(melted_batch), batch_id)
 
     writer = (
-        parsed_stream.writeStream.foreachBatch(_sink)
+        _melt(parsed_stream, specs)
+        .writeStream.foreachBatch(_sink)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
     )

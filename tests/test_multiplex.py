@@ -58,6 +58,21 @@ def test_melt_rejects_empty_specs(spark, parsed):
         melted_counter_deltas(parsed, [])
 
 
+def test_sink_rejects_empty_specs_before_start(spark, tmp_path):
+    """The empty-catalog ValueError is raised at the call, before any
+    query starts — not on the first trigger inside foreachBatch."""
+    stream = spark.readStream.format("text").load(str(tmp_path))
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="non-empty"):
+        start_multiplexed_counter_sink(
+            parse_access_log(stream),
+            [],
+            KVCounterStore().merge,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+    assert {q.id for q in spark.streams.active} == before
+
+
 def test_melt_matches_counter_views_per_key(spark, parsed):
     """Every per-key counter in the melt ≡ the same key's counter_views
     groupBy — including the NULL-member group (username '-')."""
@@ -399,6 +414,9 @@ def test_fence_survives_engine_redelivery(spark, tmp_path):
     batch = parse_access_log(spark.read.text(str(d)))
     expect = _as_map(melted_counter_deltas(batch, specs))
     assert store.snapshot() == expect  # redelivery fenced, tail applied
+    stats = store.stats()
+    assert stats["merges_applied"] == len(set(delivered)) == len(LINES)
+    assert stats["replays_fenced"] == 1
 
 
 def test_zrevrange_board_read(spark, parsed):
@@ -429,3 +447,79 @@ def test_replay_fence(spark, parsed):
     store.merge(deltas, 0)  # id BELOW the high-water mark: also fenced
     assert store.snapshot() == twice
     assert store.high_water_batch_id == 1
+
+
+def test_store_stats_count_merges_replays_and_backfills(spark, parsed):
+    """stats() counts exactly what the write path did: a backfill, two
+    applied merges, a forced redelivery of the same batch_id and one id
+    below the fence (both dropped), and a refused backfill (not
+    counted)."""
+    deltas = melted_counter_deltas(parsed, log_counter_specs())
+    n_rows = deltas.count()
+    store = KVCounterStore()
+    assert store.stats() == {
+        "merges_applied": 0,
+        "replays_fenced": 0,
+        "rows_merged": 0,
+        "backfills": 0,
+    }
+    store.backfill(deltas)
+    store.merge(deltas, 0)
+    store.merge(deltas, 0)  # forced redelivery of batch 0
+    store.merge(deltas, 1)
+    store.merge(deltas, 0)  # below the high-water mark
+    with pytest.raises(RuntimeError):
+        store.backfill(deltas)
+    assert store.stats() == {
+        "merges_applied": 2,
+        "replays_fenced": 2,
+        "rows_merged": 2 * n_rows,
+        "backfills": 1,
+    }
+    # a restored store counts its own writes only
+    assert KVCounterStore.restore(*store.persist_state()).stats() == {
+        "merges_applied": 0,
+        "replays_fenced": 0,
+        "rows_merged": 0,
+        "backfills": 0,
+    }
+
+
+def test_store_stats_consistent_under_concurrent_merges():
+    """Racing writers with overlapping batch_ids: every merge call is
+    counted exactly once, as applied or as fenced, and the row count
+    matches the applied merges (a lost update would break either)."""
+    import sys
+    import threading
+
+    class _Rows:  # merge() only calls collect()
+        def collect(self):
+            return [{"counter": "totals", "member": "line_cnt", "delta": 1}]
+
+    store = KVCounterStore()
+    calls_per_thread, n_threads = 200, 8
+    barrier = threading.Barrier(n_threads)
+
+    def _writer():
+        barrier.wait()
+        for batch_id in range(calls_per_thread):
+            store.merge(_Rows(), batch_id)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=_writer) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    stats = store.stats()
+    assert stats["merges_applied"] + stats["replays_fenced"] == (
+        calls_per_thread * n_threads
+    )
+    assert stats["rows_merged"] == stats["merges_applied"]
+    assert store.zscore("totals", "line_cnt") == stats["merges_applied"]
+    assert store.high_water_batch_id == calls_per_thread - 1

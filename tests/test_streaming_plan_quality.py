@@ -119,8 +119,10 @@ def test_multiplexed_counter_catalog_one_scan_per_trigger(
     """THE N-counter aggregate-cost pin (r7 VERDICT item 1): the ENTIRE
     11-counter catalog through ONE streaming query; every trigger's
     delta job is ONE scan of the micro-batch + ONE shuffle, no Python —
-    asserted on the EXECUTED plan captured inside the foreachBatch hook
-    (the melt is a batch job the streaming explain cannot see). The old
+    asserted on the EXECUTED plan captured inside the foreachBatch hook.
+    The melt is built once per query, into the streaming plan: its
+    explode shows up as the one Generate of the streaming micro-batch
+    plan, and the per-trigger delta job only aggregates. The old
     fan-out topology costs N source scans + N parses per trigger for
     the same catalog (A/B: experiments/measure_counter_multiplex.py)."""
     from logvision_spark.streaming.multiplex import (
@@ -160,11 +162,15 @@ def test_multiplexed_counter_catalog_one_scan_per_trigger(
 
     # the source scan + parse happen ONCE, in the streaming micro-batch
     # plan; foreachBatch hands the hook a LogicalRDD over that batch's
-    # already-computed rows, so the melt job re-scans NOTHING
+    # already-computed rows, so the delta job re-scans NOTHING
     assert _physical(stream_plan).count("Scan text") <= 1
+    # the melt's explode runs once, in the streaming micro-batch plan
+    assert _physical(stream_plan).count("Generate") == 1, stream_plan[:3000]
     assert len(trigger_plans) >= 2  # 10 files / 4 per trigger
     for plan in trigger_plans:
         assert_no_python_eval(plan)
+        # ...and never again inside the per-trigger delta job
+        assert plan.count("Generate") == 0, plan[:1500]
         assert plan.count("Scan text") == 0, plan[:1500]
         assert plan.count("Scan ExistingRDD") == 1, plan[:1500]
         assert plan.count("Exchange hashpartitioning") <= 1, plan[:1500]
