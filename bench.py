@@ -122,8 +122,8 @@ R7 = [
 # COLD-path companions (r18 verdict item 1, RECORD-ONLY — sidecar, not
 # the printed line): every consumer of the catalog's off-clock
 # persisted shingle cache (_shared_shingles, built in _warm_up since
-# r4) plus the IVF KMeans fit memo (_IVF_MODELS) gets ONE timed pass
-# with those caches explicitly dropped first — the cache build / model
+# r4) plus the IVF KMeans fit memo gets ONE timed pass with both
+# dropped first by catalog.invalidate_caches — the cache build / model
 # fit lands ON the clock — followed by one warm pass in the same JVM
 # for the delta. This prices the measurement boundary the warm numbers
 # exclude; the headline methodology (min-of-2 after the off-clock
@@ -232,121 +232,12 @@ def _floor_from(
 
 
 # A calib reading below this is a timer glitch, not a box speed: the
-# spin is sized for ~1 s on this class of hardware and the healthiest
-# reading ever committed is 0.946 — min-merging e.g. a 0.2 from a
-# broken clock would wedge a permanently unbeatable anchor (one
-# bounded-retry respawn every round; for a glitch in committed history
-# there is no recovery path short of rewriting evidence; r16 ADVICE).
-# Enforced per-reading inside _calib_ok so the live rolling-anchor
-# path is guarded identically to the git sweep (r17 review: a glitch
-# accepted live gets committed and then IS a glitched blob).
+# spin is sized for ~1 s on this class of hardware, and min-merging e.g.
+# a 0.2 from a broken clock would wedge a permanently unbeatable anchor.
 _CALIB_SANITY_MIN = 0.5
 
-# once-per-process latch for the sub-floor discard warning (_calib_ok):
-# the git sweep can evaluate dozens of historical readings in one run
+# once-per-process latch for the sub-floor discard warning (_calib_ok)
 _SUB_FLOOR_WARNED = False
-
-
-def _git_sidecar_floors() -> tuple[float | None, float | None]:
-    """(1-thread, N-process) calib floors min-merged across EVERY
-    committed version of the sidecar, read-only via ``git show`` (r15
-    verdict item 7). The rolling anchor's weakness was bootstrap
-    pollution: the r14 drift round overwrote the sidecar before the
-    anchor existed, so the healthy historical floor (~0.946, r13) lived
-    only in git history and the on-disk anchor sat at 1.0842 — a box
-    drifting to ~1.23 still escaped the 1.15x gate by ~0.01. Folding
-    the verified history in makes the anchor immune to any single
-    drifted round without hand-editing evidence files. Same
-    ``python`` equality gate as the live sidecar (a CPython change
-    must read as a new box); every failure mode (no git, not a repo,
-    unparseable blob) skips that blob, never aborts the bench.
-
-    History is immutable, so two guards bound the blast radius of a
-    bad committed reading (r16 ADVICE): readings below
-    ``_CALIB_SANITY_MIN`` are rejected as timer glitches rather than
-    box speeds (inside ``_calib_ok``, so the live anchor path is
-    guarded identically), and ``SPARK_GRAFT_NO_GIT_ANCHOR=1`` skips
-    the sweep entirely — the explicit recovery path when e.g. a
-    hardware change makes every historical floor permanently
-    unbeatable."""
-    if os.environ.get("SPARK_GRAFT_NO_GIT_ANCHOR"):
-        return None, None
-    st_floor: float | None = None
-    mt_floor: float | None = None
-    root = os.path.dirname(os.path.abspath(__file__))
-    try:
-        log = subprocess.run(
-            ["git", "log", "--format=%H", "--", "BENCH_DETAIL.json"],
-            capture_output=True, text=True, cwd=root, timeout=60,
-        )
-        if log.returncode != 0:
-            return None, None
-        specs = [f"{sha}:BENCH_DETAIL.json" for sha in log.stdout.split()]
-        if not specs:
-            return None, None
-        # ONE `git cat-file --batch` for every blob instead of one
-        # `git show` per commit: the sweep runs at every bench startup
-        # and the commit list grows each round (r16 review). Bytes, not
-        # text: the batch protocol frames contents by byte size.
-        batch = subprocess.run(
-            ["git", "cat-file", "--batch"],
-            input="\n".join(specs).encode() + b"\n",
-            capture_output=True, cwd=root, timeout=60,
-        )
-        if batch.returncode != 0:
-            return None, None
-        data, pos = batch.stdout, 0
-        seen_oids: set[str] = set()
-        while pos < len(data):
-            nl = data.index(b"\n", pos)
-            header = data[pos:nl].decode("utf-8", "replace").split()
-            pos = nl + 1
-            if len(header) < 3:
-                continue  # "<spec> missing": no body follows
-            oid, otype, size = header[0], header[1], int(header[2])
-            body = data[pos:pos + size]
-            pos += size + 1  # trailing newline after each object
-            if otype != "blob":
-                # unreachable while the specs name committed files, but
-                # the body MUST be consumed before skipping or every
-                # later record parses body bytes as headers (r16 ADVICE)
-                continue
-            if oid in seen_oids:
-                continue  # identical blob committed at several points
-            seen_oids.add(oid)
-            try:
-                prior = json.loads(body)
-            except ValueError:
-                continue
-            if (not isinstance(prior, dict)
-                    or prior.get("python") != sys.version):
-                continue
-            st = _floor_from(
-                prior, "calib_secs", "floor", "calib_sec_retry"
-            )
-            # mt floors carry only across the SAME worker count AND
-            # start method — a different-width probe, or one whose
-            # workers pay spawn cold-starts, is a different instrument
-            # (see _mt_workers / _mt_start_method /
-            # _mt_method_compatible for the missing-key legacy rule)
-            mt = (
-                _floor_from(
-                    prior, "calib_mt_secs", "floor_mt",
-                    "calib_sec_mt_retry",
-                )
-                if (prior.get("calib_mt_workers") == _mt_workers()
-                    and _mt_method_compatible(prior))
-                else None
-            )
-            # per-reading sanity bound already applied by _calib_ok
-            # inside _floor_from
-            if st is not None:
-                st_floor = st if st_floor is None else min(st_floor, st)
-            if mt is not None:
-                mt_floor = mt if mt_floor is None else min(mt_floor, mt)
-    except (OSError, subprocess.TimeoutExpired, ValueError):
-        return st_floor, mt_floor
-    return st_floor, mt_floor
 
 
 def _prior_calib_floor() -> float | None:
@@ -366,11 +257,8 @@ def _prior_calib_floor() -> float | None:
     PERMANENTLY slower (hardware change, same interpreter) will show
     one bounded retry per round with the trigger recorded in the
     sidecar — that is the honest "weak pending re-measure" signal.
-    Since main() also min-merges floors from immutable committed
-    history (_git_sidecar_floors), deleting the on-disk sidecar does
-    NOT reset the anchor; the explicit recovery path is
-    ``SPARK_GRAFT_NO_GIT_ANCHOR=1`` (r16 ADVICE). Returns None when no
-    usable anchor exists."""
+    Deleting the on-disk sidecar resets the anchor. Returns None when
+    no usable anchor exists."""
     prior = _read_prior_sidecar()
     return (
         _floor_from(prior, "calib_secs", "floor", "calib_sec_retry")
@@ -408,17 +296,13 @@ def _calib_ok(v) -> bool:
     JSON true would anchor at 1.0) and zero/negative/sub-floor values —
     a corrupt or timer-glitched reading must neither become a floor
     every future round trips over nor, on the write side, destroy the
-    rolling anchor by min-merging into it. The sanity floor lives HERE,
-    on every reading, not just on the git sweep: a glitch accepted by
-    the live rolling-anchor path gets committed and propagates through
-    history exactly like a glitched blob would (r17 review).
+    rolling anchor by min-merging into it.
 
     A positive reading under the floor warns VISIBLY (once per
     process): on a box genuinely >=2x faster than the ~1 s spin every
     live reading would be rejected, silently disabling every anchor —
     the operator should see "resize the spin", not an anchor-less
-    sidecar (r17 ADVICE; SPARK_GRAFT_NO_GIT_ANCHOR only skips the git
-    sweep, so this warning is the one signal the live path has)."""
+    sidecar."""
     ok = (
         isinstance(v, (int, float))
         and not isinstance(v, bool)
@@ -576,11 +460,10 @@ def _mt_method_compatible(prior: dict) -> bool:
     it — and the ``python`` identity gate already pins those blobs to
     this interpreter build, so a missing key while THIS run uses fork
     means the legacy probe used fork too. Refusing them outright would
-    drop provably comparable history and re-open the exact
-    bootstrap-pollution window the git sweep exists to close (r17
-    review). A missing key on a non-fork platform stays incomparable —
-    the legacy default there is whatever the platform picked, and
-    spawn cold-start inflation is the reason this gate exists."""
+    drop provably comparable history (r17 review). A missing key on a
+    non-fork platform stays incomparable — the legacy default there is
+    whatever the platform picked, and spawn cold-start inflation is the
+    reason this gate exists."""
     stored = prior.get("calib_mt_start_method")
     if stored is not None:
         return stored == _mt_start_method()
@@ -699,11 +582,7 @@ def _time_cold_set(spark, sf_dir: str, names: list[str]) -> dict:
     pays the rebuild ON the clock, then one warm pass in the same JVM
     gives the delta. Records both maps; failures per entry are recorded
     rather than aborting the child."""
-    from logvision_spark.catalog import (
-        CATALOG,
-        _IVF_MODELS,
-        invalidate_shingle_cache,
-    )
+    from logvision_spark.catalog import CATALOG, invalidate_caches
 
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
@@ -714,8 +593,7 @@ def _time_cold_set(spark, sf_dir: str, names: list[str]) -> dict:
         builder = CATALOG[name].builder
         try:
             builder(spark, sf_dir).collect()  # warm-up, off the clock
-            invalidate_shingle_cache()
-            _IVF_MODELS.clear()
+            invalidate_caches()
             t0 = time.perf_counter()
             builder(spark, sf_dir).collect()
             cold[name] = round(time.perf_counter() - t0, 4)
@@ -870,21 +748,6 @@ def main() -> None:
     # the N-process companion since r16)
     prior_floor = _prior_calib_floor()
     prior_floor_mt = _prior_calib_floor_mt()
-    # ...min-merged with every COMMITTED sidecar in git history (r15
-    # verdict item 7): one drift-inflated round that overwrote the
-    # on-disk sidecar can no longer poison the anchor — the healthiest
-    # floor ever committed on this interpreter carries forward
-    git_floor, git_floor_mt = _git_sidecar_floors()
-    if git_floor is not None:
-        prior_floor = (
-            git_floor if prior_floor is None
-            else min(prior_floor, git_floor)
-        )
-    if git_floor_mt is not None:
-        prior_floor_mt = (
-            git_floor_mt if prior_floor_mt is None
-            else min(prior_floor_mt, git_floor_mt)
-        )
 
     # parse first — in a JVM that has run nothing else — then core, then new
     try:
@@ -1226,11 +1089,6 @@ def main() -> None:
              # charges N interpreter cold-starts to the reading, so
              # fork/spawn floors never min-merge (see _mt_start_method)
              "calib_mt_start_method": _mt_start_method(),
-             # floors recovered read-only from committed sidecar
-             # history (null = none found on this interpreter); they
-             # min-merge into the retry anchors above and into
-             # calib_anchor below via prior_floor(_mt)
-             "calib_git_floors": {"st": git_floor, "mt": git_floor_mt},
              # calib-gated one-shot child respawn (r13 verdict item 2;
              # cross-round anchor r14 item 1): null when every child's
              # calib sat within 1.15x of BOTH anchors (same-round

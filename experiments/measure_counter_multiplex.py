@@ -42,6 +42,7 @@ Run: python experiments/measure_counter_multiplex.py
 """
 
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -140,61 +141,72 @@ class SetStore:
 def run_fanout() -> tuple[float, dict]:
     store = SetStore()
     ck = tempfile.mkdtemp(prefix="lv_ab_fan_")
-    views = counter_views(_stream())
-    t0 = time.perf_counter()
     queries = []
-    for name, view in views.items():
-        if name == "totals":
-            # global agg: one row, complete mode (no key column)
-            def _w_tot(batch_df, batch_id, _s=store):
-                for r in batch_df.collect():
-                    _s.kv[("totals", "line_cnt")] = r["line_cnt"]
-                    _s.kv[("totals", "size_kb")] = r["size_kb"]
-                    _s.kv[("totals", "traffic_mb")] = r["traffic_mb"]
+    try:
+        views = counter_views(_stream())
+        t0 = time.perf_counter()
+        for name, view in views.items():
+            if name == "totals":
+                # global agg: one row, complete mode (no key column)
+                def _w_tot(batch_df, batch_id, _s=store):
+                    for r in batch_df.collect():
+                        _s.kv[("totals", "line_cnt")] = r["line_cnt"]
+                        _s.kv[("totals", "size_kb")] = r["size_kb"]
+                        _s.kv[("totals", "traffic_mb")] = r["traffic_mb"]
 
-            q = (
-                view.writeStream.foreachBatch(_w_tot)
-                .outputMode("complete")
-                .option("checkpointLocation", f"{ck}/{name}")
-                .trigger(availableNow=True)
-                .start()
-            )
-        else:
-            # same sink recipe as sinks.foreach_batch_kv, plus the
-            # AvailableNow trigger for a bounded drain
-            member = "second" if name == "datetime" else "member"
-            q = (
-                view.writeStream.foreachBatch(
-                    store.writer(name, member, "cnt")
+                q = (
+                    view.writeStream.foreachBatch(_w_tot)
+                    .outputMode("complete")
+                    .option("checkpointLocation", f"{ck}/{name}")
+                    .trigger(availableNow=True)
+                    .start()
                 )
-                .outputMode("update")
-                .option("checkpointLocation", f"{ck}/{name}")
-                .trigger(availableNow=True)
-                .start()
-            )
-        queries.append(q)
-    print(f"fanout: {len(queries)} concurrent queries")
-    for q in queries:
-        if not q.awaitTermination(1800):
-            raise TimeoutError("fanout query did not drain")
-    sec = time.perf_counter() - t0
+            else:
+                # same sink recipe as sinks.foreach_batch_kv, plus the
+                # AvailableNow trigger for a bounded drain
+                member = "second" if name == "datetime" else "member"
+                q = (
+                    view.writeStream.foreachBatch(
+                        store.writer(name, member, "cnt")
+                    )
+                    .outputMode("update")
+                    .option("checkpointLocation", f"{ck}/{name}")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            queries.append(q)
+        print(f"fanout: {len(queries)} concurrent queries")
+        for q in queries:
+            if not q.awaitTermination(1800):
+                raise TimeoutError("fanout query did not drain")
+        sec = time.perf_counter() - t0
+    finally:
+        for q in queries:
+            q.stop()
+        shutil.rmtree(ck, ignore_errors=True)
     return sec, store.kv
 
 
 def run_multiplex() -> tuple[float, KVCounterStore]:
     store = KVCounterStore()
     ck = tempfile.mkdtemp(prefix="lv_ab_mux_")
-    t0 = time.perf_counter()
-    q = start_multiplexed_counter_sink(
-        _stream(),
-        log_counter_specs(),
-        store.merge,
-        checkpoint_dir=ck,
-        available_now=True,
-    )
-    if not q.awaitTermination(1800):
-        raise TimeoutError("multiplex query did not drain")
-    sec = time.perf_counter() - t0
+    q = None
+    try:
+        t0 = time.perf_counter()
+        q = start_multiplexed_counter_sink(
+            _stream(),
+            log_counter_specs(),
+            store.merge,
+            checkpoint_dir=ck,
+            available_now=True,
+        )
+        if not q.awaitTermination(1800):
+            raise TimeoutError("multiplex query did not drain")
+        sec = time.perf_counter() - t0
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ck, ignore_errors=True)
     add_batch = [
         p.durationMs["addBatch"]
         for p in q.recentProgress
@@ -261,8 +273,6 @@ print(
     f"  wall speedup: {fan_sec / mux_sec:.2f}x   "
     f"aggregate-cost ratio: {fan_core_sec / mux_core_sec:.2f}x"
 )
-
-import shutil  # noqa: E402
 
 shutil.rmtree(corpus, ignore_errors=True)
 spark.stop()

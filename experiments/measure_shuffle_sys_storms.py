@@ -139,7 +139,7 @@ def _run_one(partitions: int):
     from logvision_spark.catalog import (
         CATALOG,
         _shared_shingles,
-        invalidate_shingle_cache,
+        invalidate_caches,
     )
     from logvision_spark.sources.readers import load_table_cache_clear
 
@@ -163,7 +163,7 @@ def _run_one(partitions: int):
                 "steal": round(100 * d[7] / tot, 1) if len(d) > 7 else None,
             }
         )
-    invalidate_shingle_cache()
+    invalidate_caches()
     load_table_cache_clear()
     spark.stop()
     return out

@@ -109,14 +109,16 @@ def _table_fingerprint(sf_dir: str, name: str) -> tuple:
     return tuple(out) if out else ("absent", root)
 
 
-def invalidate_shingle_cache() -> None:
-    """Drop (and unpersist) the shared shingle cache explicitly."""
+def invalidate_caches() -> None:
+    """Drop (and unpersist) the shared shingle cache and empty the IVF
+    quantizer memo, so the next consumer rebuilds both."""
     hit = _SHINGLE_CACHE.pop("t", None)
     if hit is not None:
         try:
             hit[1].unpersist()
         except Exception:
             pass
+    _IVF_MODELS.clear()
 
 
 # DataSketches HLL with the default lgConfigK=12: rsd ≈ 1.04/√4096 ≈
@@ -3857,13 +3859,15 @@ reach AS (SELECT doc_id AS id, doc_id AS r FROM documents
 SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
 FROM reach GROUP BY id
 """,
-    doc="Near-dup clustering as CONNECTED COMPONENTS (iterative min-label "
-    "propagation, operators/dedup.connected_components) over the exact "
-    "Jaccard≥0.5 pair graph: every doc labeled with the smallest id "
-    "reachable through near-dup edges; keep cluster representatives "
+    doc="Near-dup clustering as CONNECTED COMPONENTS "
+    "(operators/dedup.connected_components) over the exact Jaccard≥0.5 "
+    "pair graph: every doc labeled with the smallest id reachable "
+    "through near-dup edges; keep cluster representatives "
     "(cluster_id == doc_id) to dedup without the greedy rule's "
-    "chain-over-dropping. A genuinely iterative distributed algorithm "
-    "driver-checked against DuckDB's recursive-CTE transitive closure.",
+    "chain-over-dropping. Edge sets up to driver_finish_max_edges "
+    "finish with driver union-find; larger ones run the distributed "
+    "large-star/small-star fixpoint. Driver-checked against DuckDB's "
+    "recursive-CTE transitive closure.",
 )
 def dedup_clusters(spark, sf_dir):
     from logvision_spark.operators.dedup import connected_components, ngram_jaccard_pairs
@@ -5099,78 +5103,9 @@ def mm_partition_packing(spark, sf_dir):
     return pack_assets_by_bytes(d, budget=4096, num_shards=8)
 
 
-def _driver_history() -> dict[str, tuple[int, bool]]:
-    """Per-entry driver-verification history from every CORRECTNESS_r*.json
-    the external driver has written into the repo root: name → (round the
-    entry was last sampled in, whether that latest row was green). Green =
-    no err and no explicit False among rows/schema/hash matches (None is
-    the rows-only weaker check, not a failure). Missing/unreadable files
-    degrade to an empty history (pure registration order)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hist: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            green = isinstance(row, dict) and row.get("err") is None and not any(
-                row.get(k) is False
-                for k in ("rows_match", "schema_match", "hash_match")
-            )
-            prev = hist.get(name)
-            if prev is None or rnd >= prev[0]:
-                hist[name] = (rnd, green)
-    return hist
-
-
-def _driver_checked_names() -> frozenset[str]:
-    """Entries the driver has sampled at least once, any round, any
-    status — kept as the boundary the export-order tests pin."""
-    return frozenset(_driver_history())
-
-
-def _export_order() -> list[str]:
-    """The driver samples ~50 queries per round; this ordering maximizes
-    accumulated driver-green coverage AND keeps re-verifying old rows:
-
-    1. never-sampled entries (registration order) — each is a guaranteed
-       new data point;
-    2. entries whose LATEST driver row was not green (stalest first) —
-       fixes land in front so the driver can confirm them;
-    3. green entries rotated by staleness: ascending last-sampled
-       round, registration order within a round — so every entry keeps
-       cycling back through the sampled prefix across rounds instead of
-       specific ones being pinned out indefinitely.
-
-    All entries stay in the export — nothing is hidden — and the in-repo
-    mirror (tests/test_catalog_vs_duckdb) always runs every entry
-    regardless of this ordering."""
-    hist = _driver_history()
-    names = list(CATALOG)
-    fresh = [n for n in names if n not in hist]
-    not_green = [n for n in names if n in hist and not hist[n][1]]
-    not_green.sort(key=lambda n: hist[n][0])  # stable: registration order
-    green = [n for n in names if n in hist and hist[n][1]]
-    green.sort(key=lambda n: hist[n][0])
-    return fresh + not_green + green
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: CATALOG[name].builder for name in _export_order()}
+    return {name: e.builder for name, e in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: CATALOG[name].oracle
-        for name in _export_order()
-        if CATALOG[name].oracle is not None
-    }
+    return {name: e.oracle for name, e in CATALOG.items() if e.oracle is not None}

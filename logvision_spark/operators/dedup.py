@@ -1180,7 +1180,6 @@ def connected_components(
     pair_b: str = "doc_b",
     max_iter: int = 25,
     driver_finish_max_edges: int = 4_000_000,
-    distributed_algorithm: str = "star",
 ) -> DataFrame:
     """Connected components over a near-dup pair graph: every id labeled
     with the MINIMUM id reachable from it (`cluster_id`). Singletons label
@@ -1209,25 +1208,17 @@ def connected_components(
       bounded collect of the *already-reduced* edge set is not a
       driver-side loop over data — it's the standard hybrid cut
       (GraphFrames' CC similarly short-circuits small components).
-    - larger: `distributed_algorithm` picks the iterative formulation.
-      The default "star" delegates to the large-star/small-star
-      fixpoint (`connected_components_star` below): O(log^2 n) rounds
-      independent of graph diameter, and measured 3× faster than
-      min-label even on the diameter-1 clique graphs near-dup produces
-      (20k nodes / 15k edges: 2.5 s vs 8.3 s — fewer, cheaper rounds).
-      "label" keeps min-label propagation as pure DataFrame joins —
-      each round every node takes min(own label, neighbors' labels);
-      converges in ≤ graph-diameter rounds, convergence checked on an
-      exponential schedule (after rounds 1, 2, 4, 8, …) with
-      `localCheckpoint` at block boundaries truncating lineage.
+    - larger: the large-star/small-star fixpoint (`_star_labels`
+      below): O(log^2 n) rounds independent of graph diameter, and
+      measured 3× faster than min-label propagation even on the
+      diameter-1 clique graphs near-dup produces (20k nodes / 15k
+      edges: 2.5 s vs 8.3 s — fewer, cheaper rounds).
 
     Both phases label ONLY edge-touched nodes: nodes in no pair can
     never change label, so they come back self-labeled through one
     final left join + coalesce against the collected/iterated label
     set.
     """
-    if distributed_algorithm not in ("star", "label"):
-        raise ValueError(f"unknown distributed_algorithm: {distributed_algorithm!r}")
     # persist (NOT localCheckpoint: .rdd materialization compiles the
     # non-AQE plan — measured 2× slower; persist keeps the Catalyst plan
     # and AQE-coalesced partitioning) so the candidate/verify pipeline
@@ -1294,48 +1285,8 @@ def connected_components(
                 ),
             )
         )
-    elif distributed_algorithm == "star":
-        labels = _star_labels(und, max_iter=max_iter)
-        und.unpersist()
     else:
-        edges = und.union(
-            und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).localCheckpoint(eager=False)
-        touched = edges.select(F.col("src").alias("id")).distinct()
-        labels = touched.select(
-            "id", F.col("id").alias("label")
-        ).localCheckpoint(eager=False)
-
-        def propagate(cur: DataFrame) -> DataFrame:
-            neigh = (
-                edges.join(cur.withColumnRenamed("id", "dst"), "dst")
-                .groupBy("src")
-                .agg(F.min("label").alias("_nl"))
-                .withColumnRenamed("src", "id")
-            )
-            return cur.join(neigh, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("_nl"), F.col("label"))
-                ).alias("label"),
-            )
-
-        rounds_done, block = 0, 1
-        while rounds_done < max_iter:
-            block_start = labels
-            for _ in range(min(block, max_iter - rounds_done)):
-                labels = propagate(labels)
-                rounds_done += 1
-            labels = labels.localCheckpoint(eager=False)
-            changed = (
-                labels.withColumnRenamed("label", "_new")
-                .join(block_start, "id")
-                .where(F.col("_new") != F.col("label"))
-                .count()
-            )
-            if changed == 0:
-                break
-            block *= 2
+        labels = _star_labels(und, max_iter=max_iter)
         und.unpersist()
 
     # untouched docs label themselves: one left join + coalesce over the
@@ -1351,24 +1302,18 @@ def connected_components(
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    ids: DataFrame,
-    id_col: str = "doc_id",
-    pair_a: str = "doc_a",
-    pair_b: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond") — the always-
-    distributed entry point; `connected_components` (size-adaptive)
-    delegates its large-graph phase here by default. Min-label
-    propagation converges in O(diameter) rounds, fine for near-dup
-    graphs (cliques, diameter ~1-2) but pathological on long chains;
-    alternating large-star/small-star contracts every component to a
-    star around its minimum node in O(log^2 n) rounds REGARDLESS of
-    diameter, each round two shuffles (a per-node min aggregation and
-    a distinct):
+def _star_labels(raw_edges: DataFrame, max_iter: int) -> DataFrame:
+    """Large-star/small-star fixpoint over a (src, dst) edge DF; returns
+    (id, label) rows for every edge-touched node, label = component
+    minimum — the distributed phase of `connected_components`.
+
+    Large-star/small-star (Kiveris et al. 2014, "Connected Components
+    in MapReduce and Beyond"): min-label propagation converges in
+    O(diameter) rounds, fine for near-dup graphs (cliques, diameter
+    ~1-2) but pathological on long chains; alternating large-star and
+    small-star contracts every component to a star around its minimum
+    node in O(log^2 n) rounds REGARDLESS of diameter, each round two
+    shuffles (a per-node min aggregation and a distinct):
 
     - large-star: every node attaches its strictly-larger neighbors to
       m = min(self, neighbors) — edges only ever point "down", so the
@@ -1379,9 +1324,7 @@ def connected_components_star(
 
     Convergence = the canonical (min, max) edge set reaches a fixed
     point, at which point every edge is (node -> component-min); those
-    edges ARE the label map. Same output contract as
-    `connected_components`: (id_col, cluster_id) covering every id,
-    singletons self-labeled.
+    edges ARE the label map.
 
     Each round ends in an EAGER `localCheckpoint`: a star round
     references its input ~4x (symmetrize + min-join on both stars), so
@@ -1389,27 +1332,7 @@ def connected_components_star(
     becomes the bottleneck — materializing per round keeps every plan
     two-shuffles deep. The round count is O(log^2 n) by construction,
     so per-round convergence checks (count + subtract on checkpointed
-    sets) stay cheap — unlike the min-label loop, whose O(diameter)
-    rounds need the exponential check schedule.
-    """
-    labels = _star_labels(
-        pairs.select(F.col(pair_a).alias("src"), F.col(pair_b).alias("dst")),
-        max_iter=max_iter,
-    )
-    return (
-        ids.select(F.col(id_col))
-        .join(labels.withColumnRenamed("id", id_col), id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
-        )
-    )
-
-
-def _star_labels(raw_edges: DataFrame, max_iter: int) -> DataFrame:
-    """Large-star/small-star fixpoint over a (src, dst) edge DF; returns
-    (id, label) rows for every edge-touched node, label = component
-    minimum. See `connected_components_star` for the algorithm notes."""
+    sets) stay cheap."""
     edges = (
         raw_edges.select(
             F.least("src", "dst").alias("src"),

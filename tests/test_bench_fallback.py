@@ -43,12 +43,6 @@ def _stub_engine(monkeypatch, tmp_path):
         bench, "_calibrate_mt",
         lambda iters=10_000_000, workers=None: 1.0,
     )
-    # the git-history anchor reads the REAL repo's committed sidecars
-    # (bench.py's dirname, not tmp_path) — neutralize it so the stub
-    # scenarios control their anchors completely
-    monkeypatch.setattr(
-        bench, "_git_sidecar_floors", lambda: (None, None)
-    )
     # redirect the sidecar via bench's own helper, not os.path.dirname
     # process-wide (r13 ADVICE: patching the shared os module only
     # worked because every heavy piece was stubbed)
@@ -750,9 +744,8 @@ def test_prior_mt_floor_accepted_when_legacy_sidecar_lacks_method_key(
     no key, but the probe's choice has always been deterministic (fork
     whenever the platform offers it) and the python gate already pins
     those blobs to this interpreter — so on a fork platform a missing
-    key must be treated as fork, not refused: dropping provably
-    comparable history re-opens the bootstrap-pollution window the git
-    sweep exists to close (r17 review)."""
+    key must be treated as fork, not refused: that would drop provably
+    comparable history (r17 review)."""
     if bench._mt_start_method() != "fork":
         pytest.skip("legacy-compatibility rule only provable under fork")
     _write_prior_sidecar(
@@ -770,87 +763,18 @@ def test_prior_mt_floor_accepted_when_legacy_sidecar_lacks_method_key(
 
 def test_glitch_readings_rejected_by_calib_ok_everywhere():
     """A timer-glitch reading below _CALIB_SANITY_MIN must be unusable
-    on EVERY anchor path, not just the git sweep: a glitch accepted by
-    the live rolling anchor gets committed and then IS a glitched blob
-    (r17 review)."""
+    on EVERY anchor path: a glitch accepted by the live rolling anchor
+    gets committed and then poisons every later round (r17 review)."""
     assert not bench._calib_ok(0.2)
     assert not bench._calib_ok(bench._CALIB_SANITY_MIN / 2)
     assert bench._calib_ok(bench._CALIB_SANITY_MIN)
     assert bench._calib_ok(1.08)
-    # _floor_from (shared by live + git paths) skips the glitch and
+    # _floor_from (shared by both anchors) skips the glitch and
     # keeps the healthy reading
     prior = {"calib_secs": {"core": 0.2, "new": 1.1}}
     assert bench._floor_from(
         prior, "calib_secs", "floor", "calib_sec_retry"
     ) == 1.1
-
-
-def test_git_history_floor_anchors_the_gate_without_a_sidecar(
-    monkeypatch, tmp_path, capsys
-):
-    """The r15 anchor-pollution fix (verdict item 7): with NO on-disk
-    sidecar at all (the bootstrap case that let the r14 drift round
-    poison the anchor), a healthy floor recovered from committed git
-    history must still gate a uniformly-drifted round — and min-merge
-    into the rolling anchor the run writes."""
-    _stub_engine(monkeypatch, tmp_path)
-    monkeypatch.setattr(
-        bench, "_git_sidecar_floors", lambda: (0.90, 0.93)
-    )
-
-    def retry_result(which):
-        return {
-            "queries": {n: 0.5 for n in bench.CORE},
-            "queries_pass2": {n: 0.5 for n in bench.CORE},
-            "shingle_cache_build_sec": 0.05,
-            "calib_sec": 0.92,
-            "calib_sec_mt": 0.96,
-        }
-
-    calls = _retry_spawn(
-        monkeypatch,
-        {"core": 1.20, "new": 1.15, "r4": 1.12},  # tight within-round
-        retry_result,
-        calibs_mt={"core": 1.30, "new": 1.25, "r4": 1.22},
-    )
-    bench.main()
-    assert calls.count("core") == 2
-    detail = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())
-    assert detail["calib_git_floors"] == {"st": 0.90, "mt": 0.93}
-    retry = detail["calib_retry"]
-    assert retry["child"] == "core"
-    assert retry["calib_anchor_floor"] == 0.90
-    assert retry["calib_anchor_floor_mt"] == 0.93
-    assert retry["trigger"] == ["prior_round", "prior_round_mt"]
-    # the recovered floors become the rolling anchor going forward
-    assert detail["calib_anchor"] == {"floor": 0.90, "floor_mt": 0.93}
-
-
-def test_git_history_floor_reads_this_repos_committed_sidecars():
-    """Integration: the real read-only `git show` sweep over this
-    repo's committed BENCH_DETAIL.json history. MEASURED finding, r16:
-    the r13-era sidecars carrying the healthy ~0.946 floor PREDATE the
-    `python` identity key, so the same-interpreter equality gate (the
-    gate the r15 verdict specified verbatim) refuses them — a missing
-    identity is an unknown interpreter, and accepting it would licence
-    exactly the cross-interpreter drift the key exists to rule out.
-    The best VERIFIABLE committed floor on this interpreter is
-    therefore 1.0842 (r14's r4 child); only a fresh healthy-window run
-    can beat it. Pin both halves: a usable floor is recovered, and it
-    never exceeds the known on-disk pollution level. Skipped (not
-    failed) when no committed sidecar matches this interpreter —
-    shallow clones and CPython rebuilds are environments where
-    bench.py's skip-the-anchor behavior is the correct one (r16
-    review)."""
-    st, mt = bench._git_sidecar_floors()
-    if st is None and mt is None:
-        pytest.skip(
-            "no committed sidecar matches this interpreter/history "
-            "(shallow clone or CPython rebuild) — the anchor correctly "
-            "disables itself"
-        )
-    assert st is None or 0 < st <= 1.0842
-    assert mt is None or mt > 0
 
 
 def test_calibrate_mt_smoke():

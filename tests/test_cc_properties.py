@@ -1,19 +1,17 @@
 """Property-based connected-components tests: on random pair graphs the
-driver union-find path and the distributed min-label loop must agree
-with each other AND with an independent pure-Python BFS reference —
-guards the size-adaptive hybrid (operators/dedup.connected_components)
-on shapes richer than the fixture corpus produces (chains, cycles,
-multi-edges, self-contained cliques, all-singleton graphs)."""
+driver union-find path and the distributed large-star/small-star loop
+must agree with each other AND with an independent pure-Python BFS
+reference — guards the size-adaptive hybrid
+(operators/dedup.connected_components) on shapes richer than the
+fixture corpus produces (chains, cycles, multi-edges, self-contained
+cliques, all-singleton graphs)."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from logvision_spark.operators.dedup import (
-    connected_components,
-    connected_components_star,
-)
+from logvision_spark.operators.dedup import connected_components
 
 N_NODES = 10
 
@@ -65,14 +63,13 @@ def test_both_cc_paths_match_reference(spark, edges):
     }
     assert driver == expected
 
-    for algo in ("star", "label"):
-        dist = {
-            r["doc_id"]: r["cluster_id"]
-            for r in connected_components(
-                pairs, ids, driver_finish_max_edges=0, distributed_algorithm=algo
-            ).collect()
-        }
-        assert dist == expected, algo
+    dist = {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(
+            pairs, ids, driver_finish_max_edges=0
+        ).collect()
+    }
+    assert dist == expected
 
 
 def test_star_converges_on_long_chain(spark):
@@ -86,6 +83,8 @@ def test_star_converges_on_long_chain(spark):
     )
     out = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components_star(pairs, ids, max_iter=12).collect()
+        for r in connected_components(
+            pairs, ids, driver_finish_max_edges=0, max_iter=12
+        ).collect()
     }
     assert out == {i: 0 for i in range(n)}

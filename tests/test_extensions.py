@@ -117,8 +117,8 @@ def test_connected_components_chain_and_singletons(spark):
     }
     assert got == {0: 0, 1: 1, 2: 2, 3: 1, 4: 4, 5: 1, 6: 2}
 
-    # force the distributed min-label loop (driver union-find disabled):
-    # identical labeling from the iterative path
+    # force the distributed large-star/small-star loop (driver
+    # union-find disabled): identical labeling from the iterative path
     dist = {
         r["doc_id"]: r["cluster_id"]
         for r in connected_components(
@@ -126,6 +126,40 @@ def test_connected_components_chain_and_singletons(spark):
         ).collect()
     }
     assert dist == got
+
+
+@pytest.mark.parametrize("max_edges, star_calls", [(3, 0), (2, 1)])
+def test_connected_components_driver_finish_boundary(
+    spark, monkeypatch, max_edges, star_calls
+):
+    """The driver-finish threshold at its exact boundary: a 3-edge graph
+    finishes on the driver at driver_finish_max_edges=3 and goes to the
+    distributed star loop at 2 — the limit(max+1) probe's off-by-one.
+    Both executed plans look alike (a scan of the created rows plus a
+    BroadcastHashJoin), so the branch is pinned by counting calls into
+    the star loop."""
+    from logvision_spark.operators import dedup
+
+    calls = []
+    star = dedup._star_labels
+
+    def counting_star(*args, **kwargs):
+        calls.append(1)
+        return star(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_star_labels", counting_star)
+    ids = spark.createDataFrame([(i,) for i in range(7)], ["doc_id"])
+    pairs = spark.createDataFrame(
+        [(1, 3), (3, 5), (2, 6)], ["doc_a", "doc_b"]
+    )
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.connected_components(
+            pairs, ids, driver_finish_max_edges=max_edges
+        ).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 2, 3: 1, 4: 4, 5: 1, 6: 2}
+    assert len(calls) == star_calls
 
 
 def test_word_composed_shingle_hashes_match_string_hashes(spark):

@@ -8,7 +8,7 @@ import shutil
 from logvision_spark.catalog import (
     _docs_fingerprint,
     _shared_shingles,
-    invalidate_shingle_cache,
+    invalidate_caches,
 )
 from logvision_spark.sources.readers import load_table_cache_clear
 
@@ -61,7 +61,7 @@ def test_fingerprint_sees_nested_layouts_and_absence(tmp_path):
 def test_cache_invalidates_on_regeneration(spark, tmp_path):
     d = str(tmp_path)
     _copy_docs(d)
-    invalidate_shingle_cache()
+    invalidate_caches()
     load_table_cache_clear()
     try:
         first = _shared_shingles(spark, d)
@@ -85,5 +85,5 @@ def test_cache_invalidates_on_regeneration(spark, tmp_path):
         n = second.count()  # must scan the NEW files, not the old index
         assert n == 4, n  # 6 tokens -> 4 distinct 3-shingles
     finally:
-        invalidate_shingle_cache()
+        invalidate_caches()
         load_table_cache_clear()
