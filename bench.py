@@ -188,121 +188,27 @@ def _sys_pct_between(before, after) -> float | None:
     return round(100.0 * d[2] / tot, 1)
 
 
-def _read_prior_sidecar() -> dict | None:
-    """The PREVIOUS committed sidecar, read before this run overwrites
-    the file, or None when no usable one exists (missing, unparseable,
-    not a dict, or recorded under a different interpreter — ``python``
-    rides in the sidecar since r13 precisely so a CPython upgrade
-    between rounds cannot read as machine drift)."""
-    try:
-        with open(_sidecar_path(), encoding="utf-8") as f:
-            prior = json.load(f)
-    except (OSError, ValueError):
-        return None
-    if not isinstance(prior, dict) or prior.get("python") != sys.version:
-        return None
-    return prior
-
-
-def _floor_from(
-    prior: dict, calibs_key: str, anchor_key: str, retry_key: str
-) -> float | None:
-    """Min usable probe reading across a prior sidecar's per-child
-    calibs, rolling anchor, and retry reading — shared by the 1-thread
-    and N-process anchors below."""
-    try:
-        vals = [
-            v
-            for v in (prior.get(calibs_key) or {}).values()
-            if _calib_ok(v)
-        ]
-        anchor = prior.get("calib_anchor") or {}
-        if _calib_ok(anchor.get(anchor_key)):
-            vals.append(anchor[anchor_key])
-        retry = prior.get("calib_retry") or {}
-        if _calib_ok(retry.get(retry_key)):
-            vals.append(retry[retry_key])
-    except (AttributeError, TypeError):
-        # valid-JSON-wrong-shape (calib_secs a list, calib_retry a
-        # scalar...) must disable the anchor, not abort the whole
-        # benchmark before a single query runs — same contract as a
-        # missing or unparseable file
-        return None
-    return min(vals) if vals else None
-
-
 # A calib reading below this is a timer glitch, not a box speed: the
-# spin is sized for ~1 s on this class of hardware, and min-merging e.g.
-# a 0.2 from a broken clock would wedge a permanently unbeatable anchor.
+# spin is sized for ~1 s on this class of hardware, and e.g. a 0.2 from
+# a broken clock would become the run's floor, making every healthy
+# child look over the retry ratio.
 _CALIB_SANITY_MIN = 0.5
 
 # once-per-process latch for the sub-floor discard warning (_calib_ok)
 _SUB_FLOOR_WARNED = False
 
 
-def _prior_calib_floor() -> float | None:
-    """Cross-round anchor for the calib retry gate (r14 verdict item 1).
-
-    The within-round gate compares each child only to the SAME round's
-    fastest child, which fails exactly when drift is box-WIDE: in r14
-    every child was inflated together (calibs 1.0842-1.2611 vs 0.946
-    the round before), the core child read 1.14x the same-round floor
-    — 0.01 under the gate — and two dedup queries published >2x their
-    r1 figures with no retry. The second anchor is the PREVIOUS
-    committed sidecar's calib floor. The floor includes the prior
-    round's rolling ``calib_anchor`` when present, so one
-    drift-inflated round cannot poison the anchor for the next: the
-    healthiest box speed ever probed (on this interpreter) carries
-    forward. Deliberate tradeoff, documented: a box that becomes
-    PERMANENTLY slower (hardware change, same interpreter) will show
-    one bounded retry per round with the trigger recorded in the
-    sidecar — that is the honest "weak pending re-measure" signal.
-    Deleting the on-disk sidecar resets the anchor. Returns None when
-    no usable anchor exists."""
-    prior = _read_prior_sidecar()
-    return (
-        _floor_from(prior, "calib_secs", "floor", "calib_sec_retry")
-        if prior is not None
-        else None
-    )
-
-
-def _prior_calib_floor_mt() -> float | None:
-    """Cross-round anchor for the N-process companion probe (r15
-    verdict item 2) — same rolling-min contract as
-    ``_prior_calib_floor``, over the contention-sensitive readings.
-    None until a round has recorded them (the gate then falls back to
-    the same-round mt floor alone, exactly like the 1-thread anchor's
-    first round). Gated on ``calib_mt_workers`` AND
-    ``calib_mt_start_method`` equality beside the interpreter gate: a
-    floor probed at a different worker count, or one whose workers
-    paid spawn cold-starts, is not comparable (see _mt_workers /
-    _mt_start_method)."""
-    prior = _read_prior_sidecar()
-    if (
-        prior is None
-        or prior.get("calib_mt_workers") != _mt_workers()
-        or not _mt_method_compatible(prior)
-    ):
-        return None
-    return _floor_from(
-        prior, "calib_mt_secs", "floor_mt", "calib_sec_mt_retry"
-    )
-
-
 def _calib_ok(v) -> bool:
     """A usable probe reading: real number at or above the sanity
     floor. Excludes bools (isinstance(True, int) is True — a mangled
-    JSON true would anchor at 1.0) and zero/negative/sub-floor values —
-    a corrupt or timer-glitched reading must neither become a floor
-    every future round trips over nor, on the write side, destroy the
-    rolling anchor by min-merging into it.
+    true would read as 1.0) and zero/negative/sub-floor values — a
+    corrupt or timer-glitched reading must not become the run's floor
+    every healthy child trips over.
 
     A positive reading under the floor warns VISIBLY (once per
     process): on a box genuinely >=2x faster than the ~1 s spin every
-    live reading would be rejected, silently disabling every anchor —
-    the operator should see "resize the spin", not an anchor-less
-    sidecar."""
+    reading would be rejected, silently disabling the retry gate — the
+    operator should see "resize the spin", not a gate-less run."""
     ok = (
         isinstance(v, (int, float))
         and not isinstance(v, bool)
@@ -317,7 +223,7 @@ def _calib_ok(v) -> bool:
             f"bench: WARNING calib reading {v} discarded: below the "
             f"{_CALIB_SANITY_MIN}s sanity floor. If this box is "
             "genuinely that fast, resize the spin (_spin iters) - "
-            "otherwise every anchor silently disables.",
+            "otherwise the retry gate silently disables.",
             file=sys.stderr,
         )
     return ok
@@ -363,7 +269,7 @@ def _calibrate_mt(
     seconds for ``workers`` concurrent copies of the same spin to ALL
     finish. The 1-thread probe is demonstrably blind to multi-core
     contention — in r15 the "new" child probed 1.166 (healthy, inside
-    both retry anchors) while its 32-thread queries published ~1.5-2.7x
+    the retry gate) while its 32-thread queries published ~1.5-2.7x
     their r14 mins on byte-identical code: a single spin always finds
     one free core under co-tenant load; a 32-thread Spark stage does
     not. PROCESSES, not threads: the spin holds the GIL, so N threads
@@ -386,9 +292,8 @@ def _calibrate_mt(
     try:
         import multiprocessing as mp
 
-        # same start method the sidecar records and the anchors gate on
-        # (spawn re-imports bench.py as __mp_main__; the __main__ guard
-        # keeps that import side-effect-free)
+        # spawn re-imports bench.py as __mp_main__; the __main__ guard
+        # keeps that import side-effect-free
         ctx = mp.get_context(_mt_start_method())
         t0 = time.perf_counter()
         procs = [
@@ -422,11 +327,10 @@ def _mt_workers() -> int:
     """The N-process probe's worker count: the query parallelism
     ($SPARK_GRAFT_CPUS, the local[N] the timed stages run at), capped
     by the visible CPU count. Recorded in the sidecar
-    (``calib_mt_workers``) and EQUALITY-GATED by both mt anchors, like
-    the ``python`` key: an mt reading taken at a different width is a
-    different instrument (8 workers on 32 cores don't self-contend the
-    way 32 do), and min-merging it would either wedge a permanently
-    unbeatable floor or mask real contention (r16 review)."""
+    (``calib_mt_workers``) beside the readings: an mt reading taken at
+    a different width is a different instrument (8 workers on 32 cores
+    don't self-contend the way 32 do), so readings compare only at
+    equal worker counts."""
     ncpu = os.cpu_count() or 8
     try:
         workers = int(os.environ.get("SPARK_GRAFT_CPUS", "") or ncpu)
@@ -438,36 +342,15 @@ def _mt_workers() -> int:
 def _mt_start_method() -> str:
     """The multiprocessing start method the N-process probe launches
     its workers with: fork when the platform offers it, else the
-    platform default. Recorded in the sidecar
-    (``calib_mt_start_method``) and EQUALITY-GATED by both mt anchors
-    beside the worker count: under spawn, _calibrate_mt's clock starts
-    before N interpreter cold-starts and module re-imports, so spawn
-    readings are systematically inflated relative to fork ones — a
-    different instrument whose floors must never min-merge (r16
-    ADVICE)."""
+    platform default. Fork is preferred because under spawn,
+    _calibrate_mt's clock starts before N interpreter cold-starts and
+    module re-imports, so spawn readings are systematically inflated
+    relative to fork ones."""
     import multiprocessing as mp
 
     if "fork" in mp.get_all_start_methods():
         return "fork"
     return mp.get_context()._name  # platform default, e.g. "spawn"
-
-
-def _mt_method_compatible(prior: dict) -> bool:
-    """True when a prior sidecar's mt readings were (or provably would
-    have been) probed with this run's start method. Sidecars written
-    before the key existed never recorded it, but the probe's choice
-    has always been deterministic — fork whenever the platform offers
-    it — and the ``python`` identity gate already pins those blobs to
-    this interpreter build, so a missing key while THIS run uses fork
-    means the legacy probe used fork too. Refusing them outright would
-    drop provably comparable history (r17 review). A missing key on a
-    non-fork platform stays incomparable — the legacy default there is
-    whatever the platform picked, and spawn cold-start inflation is the
-    reason this gate exists."""
-    stored = prior.get("calib_mt_start_method")
-    if stored is not None:
-        return stored == _mt_start_method()
-    return _mt_start_method() == "fork"
 
 
 def _get_spark():
@@ -743,12 +626,6 @@ def main() -> None:
         _run_child(sys.argv[sys.argv.index("--run") + 1], sf_dir)
         return
 
-    # read the PREVIOUS round's committed sidecar before anything can
-    # overwrite it: the cross-round retry anchors (r14 verdict item 1;
-    # the N-process companion since r16)
-    prior_floor = _prior_calib_floor()
-    prior_floor_mt = _prior_calib_floor_mt()
-
     # parse first — in a JVM that has run nothing else — then core, then new
     try:
         # TWO fresh parse JVMs, report the per-metric MAX: the within-JVM
@@ -871,20 +748,15 @@ def main() -> None:
         missing_calib = sorted(
             k for k in calib_secs if k not in known_calib
         )
-        # A child triggers when EITHER probe exceeds the band over
-        # either of its anchors: the same-round fastest child (r13 gate
-        # — catches one child in a slow window) OR the prior committed
-        # sidecar's floor (r14 verdict item 1 — catches box-WIDE drift,
-        # where every child inflates together and the within-round
-        # ratio stays tight exactly when the drift is worst). The
-        # 1-thread and N-process probes gate independently against
-        # their own floors (r15 verdict item 2: the 1-thread spin reads
-        # healthy under exactly the multi-core co-tenant load that
-        # inflates 32-thread stages — r15's "new" child probed 1.166
-        # while its queries ran ~1.5-2.7x their r14 mins). A same-round
-        # anchor needs >=2 children to mean anything; a cross-round
-        # anchor works from one. Still bounded to ONE respawn: the
-        # worst offender by trip ratio.
+        # A child triggers when EITHER probe exceeds the band over the
+        # same run's fastest child on that probe (r13 gate — catches one
+        # child in a slow window). The 1-thread and N-process probes
+        # gate independently against their own floors (r15 verdict item
+        # 2: the 1-thread spin reads healthy under exactly the
+        # multi-core co-tenant load that inflates 32-thread stages —
+        # r15's "new" child probed 1.166 while its queries ran ~1.5-2.7x
+        # their r14 mins). A floor needs >=2 children to mean anything.
+        # Bounded to ONE respawn: the worst offender by trip ratio.
         floor = min(known_calib.values()) if len(known_calib) >= 2 else None
         floor_mt = min(known_mt.values()) if len(known_mt) >= 2 else None
         triggered: dict[str, list[str]] = {}
@@ -897,20 +769,12 @@ def main() -> None:
                 if floor is not None and v > floor * _CALIB_RETRY_RATIO:
                     trig.append("same_round")
                     worst_ratio = max(worst_ratio, v / floor)
-                if (prior_floor is not None
-                        and v > prior_floor * _CALIB_RETRY_RATIO):
-                    trig.append("prior_round")
-                    worst_ratio = max(worst_ratio, v / prior_floor)
             vm = known_mt.get(k)
             if vm is not None:
                 if (floor_mt is not None
                         and vm > floor_mt * _CALIB_RETRY_RATIO):
                     trig.append("same_round_mt")
                     worst_ratio = max(worst_ratio, vm / floor_mt)
-                if (prior_floor_mt is not None
-                        and vm > prior_floor_mt * _CALIB_RETRY_RATIO):
-                    trig.append("prior_round_mt")
-                    worst_ratio = max(worst_ratio, vm / prior_floor_mt)
             if trig:
                 triggered[k] = trig
                 trip_ratio[k] = worst_ratio
@@ -922,10 +786,6 @@ def main() -> None:
                 "calib_sec_mt_first": known_mt.get(worst),
                 "calib_floor": floor,
                 "calib_floor_mt": floor_mt,
-                # the cross-round anchors and which anchor(s) tripped —
-                # the r14/r15 blind spots' evidence trail
-                "calib_anchor_floor": prior_floor,
-                "calib_anchor_floor_mt": prior_floor_mt,
                 "trigger": triggered[worst],
             }
             try:
@@ -1008,34 +868,6 @@ def main() -> None:
     # written unconditionally: the single-JVM fallback has no pass-2
     # data, and leaving the previous round's sidecar on disk would pass
     # stale detail off as current evidence
-    # rolling cross-round anchor: the fastest calib ever probed on this
-    # interpreter — this round's children (and retry), min-merged with
-    # the prior sidecar's anchor — so the NEXT round's retry gate can
-    # catch box-wide drift that inflates all of its children together
-    # (r14 verdict item 1). Resets automatically when sys.version
-    # changes: _prior_calib_floor refuses a cross-interpreter anchor.
-    anchor_vals = [v for v in calib_secs.values() if _calib_ok(v)]
-    if retry_detail and _calib_ok(retry_detail.get("calib_sec_retry")):
-        anchor_vals.append(retry_detail["calib_sec_retry"])
-    if prior_floor is not None:
-        anchor_vals.append(prior_floor)
-    # same rolling-min contract for the N-process companion (absent
-    # until a round has recorded mt readings on this interpreter)
-    anchor_mt_vals = [
-        v for v in calib_mt_secs.values() if _calib_ok(v)
-    ]
-    if retry_detail and _calib_ok(
-        retry_detail.get("calib_sec_mt_retry")
-    ):
-        anchor_mt_vals.append(retry_detail["calib_sec_mt_retry"])
-    if prior_floor_mt is not None:
-        anchor_mt_vals.append(prior_floor_mt)
-    calib_anchor: dict[str, float] | None = {}
-    if anchor_vals:
-        calib_anchor["floor"] = round(min(anchor_vals), 4)
-    if anchor_mt_vals:
-        calib_anchor["floor_mt"] = round(min(anchor_mt_vals), 4)
-    calib_anchor = calib_anchor or None
     with open(_sidecar_path(), "w") as f:
         json.dump(
             {"queries_pass2": pass2 or None,
@@ -1080,28 +912,17 @@ def main() -> None:
                  k for k, v in sys_pcts.items()
                  if isinstance(v, (int, float)) and v >= _SYS_STORM_PCT
              ) or None,
-             # the width the mt probes ran at: both mt anchors
-             # equality-gate on this beside the interpreter gate (a
-             # floor probed at a different worker count is a different
-             # instrument — see _mt_workers)
+             # the width the mt probes ran at, record-only: readings
+             # compare only at equal worker counts (see _mt_workers)
              "calib_mt_workers": _mt_workers(),
-             # ...and the start method they launched with: spawn
-             # charges N interpreter cold-starts to the reading, so
-             # fork/spawn floors never min-merge (see _mt_start_method)
-             "calib_mt_start_method": _mt_start_method(),
-             # calib-gated one-shot child respawn (r13 verdict item 2;
-             # cross-round anchor r14 item 1): null when every child's
-             # calib sat within 1.15x of BOTH anchors (same-round
-             # fastest child AND the prior committed sidecar's floor);
-             # else the trigger calibs + which anchor tripped plus the
-             # respawned child's full figures (already folded into
-             # queries_min) or the spawn error; a child that reported
-             # no calib at all is recorded here too (r14 ADVICE)
+             # calib-gated one-shot child respawn (r13 verdict item 2):
+             # null when every child's calibs sat within 1.15x of this
+             # run's fastest child on each probe; else the trigger
+             # calibs + which probe tripped plus the respawned child's
+             # full figures (already folded into queries_min) or the
+             # spawn error; a child that reported no calib at all is
+             # recorded here too (r14 ADVICE)
              "calib_retry": retry_detail,
-             # fastest calib ever probed on this interpreter (rolling
-             # min across rounds): next round's cross-round retry
-             # anchor — see _prior_calib_floor
-             "calib_anchor": calib_anchor,
              # interpreter identity beside the probe (r13 ADVICE): the
              # calib ratio conflates interpreter changes with box-speed
              # drift — a CPython upgrade between rounds would read as

@@ -45,10 +45,9 @@ def _grp(line: Column, i: int) -> Column:
     return F.regexp_extract(line, COMBINED_LOG_PATTERN, i)
 
 
-def parse_access_log(
-    df: DataFrame, line_col: str = "value", keep_raw: bool = True
-) -> DataFrame:
-    """Parse a DataFrame of raw log lines into the typed ACCESS_LOG_SCHEMA.
+def parse_access_log(df: DataFrame) -> DataFrame:
+    """Parse a DataFrame of raw log lines (column ``value``) into the
+    typed ACCESS_LOG_SCHEMA, keeping the line itself as ``raw``.
 
     Works identically on batch and streaming DataFrames (the point of
     Structured Streaming — one lineage, two execution modes).
@@ -58,7 +57,7 @@ def parse_access_log(
     ``nullif``-style ``when`` and ``-`` placeholders become NULL through the
     numeric casts (``'-'`` fails the \\d pattern so group extract gives '').
     """
-    line = F.col(line_col)
+    line = F.col("value")
     matched = line.rlike(COMBINED_LOG_PATTERN)
 
     def s(i: int) -> Column:  # string group, '' → NULL
@@ -84,7 +83,7 @@ def parse_access_log(
         s(10).alias("referrer"),
         s(11).alias("user_agent"),
         matched.alias("parsed"),
-        *([line.alias("raw")] if keep_raw else []),
+        line.alias("raw"),
     )
     return parsed
 
@@ -100,17 +99,7 @@ def split_lines(df: DataFrame, value_col: str = "value") -> DataFrame:
     ).where(F.col(value_col) != "")
 
 
-def with_epoch_millis(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Compat column: epoch milliseconds like the reference stores
-    (streaming.scala:73,82 keeps epoch-ms-as-string)."""
-    return df.withColumn("unix_millis", F.unix_millis(F.col(ts_col)))
-
-
-def read_access_log(spark, path: str, streaming: bool = False) -> DataFrame:
-    """Source → typed log records. Batch or file-streaming (S2 capability:
-    tail a growing log directory, flume/standalone.conf:7-17)."""
-    if streaming:
-        raw = spark.readStream.format("text").load(path)
-    else:
-        raw = spark.read.format("text").load(path)
-    return parse_access_log(raw, "value")
+def read_access_log(spark, path: str) -> DataFrame:
+    """Batch source → typed log records. To tail a growing log
+    directory, parse ``sources.readers.read_file_stream`` instead."""
+    return parse_access_log(spark.read.format("text").load(path))

@@ -58,6 +58,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from logvision_spark.streaming.pipeline import COUNTER_KEYS
+
 DELTA_SCHEMA = "counter string, member string, delta long"
 
 # Per-process discriminator for persist_state_to's unique tmp siblings
@@ -158,16 +160,7 @@ def log_counter_specs() -> list[CounterSpec]:
     """
     parsed = F.col("parsed")
     specs = [
-        CounterSpec(key, F.col(key), when=parsed)
-        for key in (
-            "host",
-            "rfc931",
-            "username",
-            "req_method",
-            "url",
-            "protocol",
-            "status_code",
-        )
+        CounterSpec(key, F.col(key), when=parsed) for key in COUNTER_KEYS
     ]
     specs.append(
         CounterSpec(

@@ -132,12 +132,8 @@ def foreach_batch_kv(
     zincrby-equivalent hook, checkpoint-fenced so a replayed batch can
     be deduplicated by batch_id (the reference's zincrby double-counts
     on replay)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch(batch_df, batch_id)
-
     return (
-        view.writeStream.foreachBatch(_sink)
+        view.writeStream.foreachBatch(write_batch)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .start()

@@ -134,9 +134,9 @@ def test_sub_floor_calib_reading_warns_visibly_once(
     monkeypatch, capsys
 ):
     """r17 ADVICE: a positive reading under _CALIB_SANITY_MIN is how a
-    genuinely-fast box looks — discarding it silently disables every
-    anchor with no signal. One stderr warning per process, pointing at
-    the spin size; zero/negative/bool garbage stays silent (that's
+    genuinely-fast box looks — discarding it silently disables the
+    retry gate with no signal. One stderr warning per process, pointing
+    at the spin size; zero/negative/bool garbage stays silent (that's
     corruption, not speed)."""
     monkeypatch.setattr(bench, "_SUB_FLOOR_WARNED", False)
     assert bench._calib_ok(0.2) is False

@@ -51,6 +51,21 @@ def _as_map(df):
     }
 
 
+class _StubDeltas:
+    """Spark-free deltas for the store: merge() and backfill() only call
+    collect(). ``delta=None`` makes collect() fail like a lost executor."""
+
+    def __init__(self, delta=1):
+        self.delta = delta
+
+    def collect(self):
+        if self.delta is None:
+            raise RuntimeError("executor lost")
+        return [
+            {"counter": "totals", "member": "line_cnt", "delta": self.delta}
+        ]
+
+
 def test_melt_rejects_empty_specs(spark, parsed):
     """An empty catalog is a caller bug — clear ValueError, not the
     opaque analysis failure F.array() with zero columns produces."""
@@ -492,10 +507,6 @@ def test_store_stats_consistent_under_concurrent_merges():
     import sys
     import threading
 
-    class _Rows:  # merge() only calls collect()
-        def collect(self):
-            return [{"counter": "totals", "member": "line_cnt", "delta": 1}]
-
     store = KVCounterStore()
     calls_per_thread, n_threads = 200, 8
     barrier = threading.Barrier(n_threads)
@@ -503,7 +514,7 @@ def test_store_stats_consistent_under_concurrent_merges():
     def _writer():
         barrier.wait()
         for batch_id in range(calls_per_thread):
-            store.merge(_Rows(), batch_id)
+            store.merge(_StubDeltas(), batch_id)
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -523,3 +534,37 @@ def test_store_stats_consistent_under_concurrent_merges():
     assert stats["rows_merged"] == stats["merges_applied"]
     assert store.zscore("totals", "line_cnt") == stats["merges_applied"]
     assert store.high_water_batch_id == calls_per_thread - 1
+
+
+@pytest.mark.parametrize("failing_batch", [0, 3], ids=["first", "later"])
+def test_merge_crash_in_collect_leaves_store_unchanged(failing_batch):
+    """The crash window between merge()'s fence check and the fence
+    advance: the delta job dies inside ``collect()``. The store must be
+    exactly as before the call (no totals, no fence move, no stats), the
+    engine's redelivery of that batch_id must then apply exactly once,
+    and an unforced backfill must already be refused — merge raised the
+    live-begun flag before the collect, so this holds even when the
+    failing batch was the first and the high-water mark is still -1."""
+    store = KVCounterStore()
+    for batch_id in range(failing_batch):
+        store.merge(_StubDeltas(1), batch_id)
+    before = (store.high_water_batch_id, store.snapshot(), store.stats())
+
+    with pytest.raises(RuntimeError, match="executor lost"):
+        store.merge(_StubDeltas(None), failing_batch)
+    assert (
+        store.high_water_batch_id, store.snapshot(), store.stats()
+    ) == before
+    with pytest.raises(RuntimeError, match="live merges have begun"):
+        store.backfill(_StubDeltas(100))
+
+    store.merge(_StubDeltas(5), failing_batch)  # the engine's redelivery
+    store.merge(_StubDeltas(5), failing_batch)  # a second redelivery: fenced
+    assert store.high_water_batch_id == failing_batch
+    assert store.zscore("totals", "line_cnt") == failing_batch + 5
+    assert store.stats() == {
+        "merges_applied": failing_batch + 1,
+        "replays_fenced": 1,
+        "rows_merged": failing_batch + 1,
+        "backfills": 0,
+    }
